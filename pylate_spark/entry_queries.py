@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from pylate_spark.config import ENGLISH_STOPWORDS
 from pylate_spark.functions.tokenize import native_tokens_col, token_sql
-from pylate_spark.operators import dedup, multimodal, similarity, textstats
+from pylate_spark.operators import dedup, similarity, textstats
 from pylate_spark.plans.query import bm25_scan_topk
 
 TOKEN_SQL = token_sql("text")  # engine-default (unicode) definition
@@ -191,8 +191,8 @@ def q_bm25_join_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed path's allow-list: candidates restricted to
     docid % 3 == 0 with global corpus stats — must hash-match the same
     subset oracle as the kernel/scan paths (reference semantics,
-    fast_plaid.py:318-340), exercising the subset semi-join on every
-    decode leg of the two-phase plan."""
+    fast_plaid.py:318-340), exercising the subset semi-join on the
+    decode leg."""
     from pylate_spark.plans.query import InvertedIndex
 
     idx = InvertedIndex(spark, _indexed(spark, sf_dir))

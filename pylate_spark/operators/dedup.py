@@ -344,61 +344,65 @@ def dedup_clusters(
         .sortWithinPartitions("t")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    edges.count()
-    verts = edges.select(F.col("s").alias("v")).distinct()
-    if docs is not None:
-        verts = verts.unionByName(docs.select(F.col(id_col).alias("v"))).distinct()
-    labels = verts.select("v", F.col("v").alias("lbl"))
-    changed = -1
-    rounds = 0
-    # max_iter update rounds + 1 verification round (see docstring);
-    # max_iter <= 0 skips the loop → identity labels, no raise
-    for rounds in range(1, max_iter + 2) if max_iter > 0 else ():
-        nmin = (
-            edges.join(labels.withColumnRenamed("v", "t"), "t")
-            .groupBy("s")
-            .agg(F.min("lbl").alias("nlbl"))
-            .withColumnRenamed("s", "v")
-        )
-        # pointer doubling: label's current label
-        l2 = labels.select(F.col("v").alias("lbl"), F.col("lbl").alias("llbl"))
-        # carry the old label through the checkpoint so convergence is a
-        # cheap filter+count over the checkpointed rows — the round-6
-        # form paid an extra labels join (plus its shuffles) per round
-        # just to count changes (r7, guide §2.4)
-        new = (
-            labels.join(nmin, "v", "left")
-            .join(l2, "lbl", "left")
-            .select(
-                "v",
-                F.col("lbl").alias("_old"),
-                F.least(
-                    F.col("lbl"),
-                    F.coalesce(F.col("nlbl"), F.col("lbl")),
-                    F.coalesce(F.col("llbl"), F.col("lbl")),
-                ).alias("lbl"),
+    # the edge cache is released on EVERY exit — convergence, the
+    # non-convergence raise, and a round that throws (executor loss,
+    # lost checkpoint block). After an update round labels is
+    # checkpointed (lineage-free), so the returned plan no longer reads
+    # the cache; with max_iter <= 0 it re-derives from the edge plan.
+    try:
+        edges.count()
+        verts = edges.select(F.col("s").alias("v")).distinct()
+        if docs is not None:
+            verts = verts.unionByName(docs.select(F.col(id_col).alias("v"))).distinct()
+        labels = verts.select("v", F.col("v").alias("lbl"))
+        changed = -1
+        rounds = 0
+        # max_iter update rounds + 1 verification round (see docstring);
+        # max_iter <= 0 skips the loop → identity labels, no raise
+        for rounds in range(1, max_iter + 2) if max_iter > 0 else ():
+            nmin = (
+                edges.join(labels.withColumnRenamed("v", "t"), "t")
+                .groupBy("s")
+                .agg(F.min("lbl").alias("nlbl"))
+                .withColumnRenamed("s", "v")
             )
-            .localCheckpoint(eager=True)  # iterative plan would grow unboundedly
-        )
-        changed = new.where(F.col("lbl") != F.col("_old")).count()
-        labels = new.select("v", "lbl")
-        if changed == 0:
-            break
-    else:
-        if max_iter > 0:
-            edges.unpersist(blocking=False)
-            # exhausting the budget with labels still moving means split
-            # components — silently returning them would hand callers
-            # wrong cluster assignments with no signal
-            raise RuntimeError(
-                f"dedup_clusters did not converge after {rounds} rounds "
-                f"(max_iter={max_iter} update rounds + 1 verification; "
-                f"{changed} labels still changing on the last round); "
-                "raise max_iter (pointer doubling needs O(log diameter) rounds)"
+            # pointer doubling: label's current label
+            l2 = labels.select(F.col("v").alias("lbl"), F.col("lbl").alias("llbl"))
+            # carry the old label through the checkpoint so convergence is a
+            # cheap filter+count over the checkpointed rows — the round-6
+            # form paid an extra labels join (plus its shuffles) per round
+            # just to count changes (r7, guide §2.4)
+            new = (
+                labels.join(nmin, "v", "left")
+                .join(l2, "lbl", "left")
+                .select(
+                    "v",
+                    F.col("lbl").alias("_old"),
+                    F.least(
+                        F.col("lbl"),
+                        F.coalesce(F.col("nlbl"), F.col("lbl")),
+                        F.coalesce(F.col("llbl"), F.col("lbl")),
+                    ).alias("lbl"),
+                )
+                .localCheckpoint(eager=True)  # iterative plan would grow unboundedly
             )
-    # labels is checkpointed (lineage-free): the edge cache is no longer
-    # referenced by the returned plan
-    edges.unpersist(blocking=False)
+            changed = new.where(F.col("lbl") != F.col("_old")).count()
+            labels = new.select("v", "lbl")
+            if changed == 0:
+                break
+        else:
+            if max_iter > 0:
+                # exhausting the budget with labels still moving means split
+                # components — silently returning them would hand callers
+                # wrong cluster assignments with no signal
+                raise RuntimeError(
+                    f"dedup_clusters did not converge after {rounds} rounds "
+                    f"(max_iter={max_iter} update rounds + 1 verification; "
+                    f"{changed} labels still changing on the last round); "
+                    "raise max_iter (pointer doubling needs O(log diameter) rounds)"
+                )
+    finally:
+        edges.unpersist(blocking=False)
     return labels.select(
         F.col("v").alias(id_col),
         F.col("lbl").alias("cluster_id"),

@@ -401,6 +401,8 @@ def probe_recall_curve(
             probes.append(p)
             p *= 2
         probes.append(ceiling)
+    if not probes:
+        return []  # no points to measure (and an empty pool cannot start)
     own_exact = exact is None
     if own_exact:
         exact = cosine_topk(emb, queries, k=k, **cols).cache()

@@ -151,6 +151,28 @@ def test_dedup_clusters_connected_components(spark):
         dedup.dedup_clusters(pairs, docs=docs, max_iter=1).collect()
 
 
+def test_dedup_clusters_releases_edge_cache_when_a_round_raises(spark, monkeypatch):
+    """A round that throws mid-propagation must still unpersist the
+    cached edge set — the persistent-RDD count is back where it was."""
+    import pandas as pd
+
+    pairs = spark.createDataFrame(
+        pd.DataFrame([(1, 2), (2, 3), (3, 4)], columns=["doc_a", "doc_b"])
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+
+    def failing_round(self, eager=True):
+        raise RuntimeError("round failed")
+
+    # every propagation round checkpoints its labels; nothing before the
+    # loop does, so this makes the first round raise
+    monkeypatch.setattr(type(pairs), "localCheckpoint", failing_round)
+    with pytest.raises(RuntimeError, match="round failed"):
+        dedup.dedup_clusters(pairs)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_simhash_near_dups_are_close(dup_docs):
     sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(dup_docs).collect()}
     assert sh[0] == sh[1] == sh[4]

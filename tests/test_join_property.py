@@ -1,16 +1,15 @@
-"""Adversarial property test for the two-phase distributed MaxScore
-plan: on SAMPLED query batches / k / head_df_cutoff against a corpus
-built to maximize boundary events (a true stopword in every doc, mid
-terms, singleton rares, absent terms), ``search_join(two_phase=True)``
-must be rank-identical to the exhaustive kernel — the same sampling
-attack that paid off on the kernel (``test_kernel_property.py``) and
-the dedup pipelines (``test_dedup_property.py``), now aimed at the θ/
-hub pruning argument in ``plans/query.py``:
+"""Adversarial property test for the distributed ``search_join`` plan:
+on SAMPLED query batches and k against a corpus built to maximize
+boundary events (a true stopword in every doc, mid terms, singleton
+rares, absent terms), ``search_join`` must be rank-identical to the
+exhaustive kernel — the same sampling attack that paid off on the
+kernel (``test_kernel_property.py``) and the dedup pipelines
+(``test_dedup_property.py``), now aimed at the term-scatter join in
+``plans/query.py``:
 
-- stopword-only queries must take the exact phase-2b leg (hub ≥ θ−ε);
-- queries with < k phase-1 candidates must not lose docs to θ pruning;
-- cutoff 0 (everything head) and 10^9 (everything rare) are the plan's
-  degenerate corners;
+- stopword-only queries scatter a posting list that covers every doc;
+- rare-only queries can have fewer than k matches;
+- absent terms must contribute nothing and drop no other term's docs;
 - duplicate terms in the query text must not double-count.
 """
 
@@ -28,8 +27,8 @@ from pylate_spark.plans.query import InvertedIndex
 
 K_MAX = 12
 
-#: vocabulary tiers: "the" appears in EVERY doc (df = n_docs — the
-#: unbounded-hub trigger), mids in ~a third, rares in 1-3 docs
+#: vocabulary tiers: "the" appears in EVERY doc (df = n_docs), mids in
+#: ~a third, rares in 1-3 docs
 VOCAB = ["the", "mid1", "mid2", "mid3", "rare1", "rare2", "rare3", "zzzabsent"]
 
 
@@ -90,8 +89,7 @@ def batch_case(draw):
             words = draw(st.lists(st.sampled_from(VOCAB), min_size=1, max_size=5))
         queries.append((qid, " ".join(words)))
     k = draw(st.integers(min_value=1, max_value=K_MAX))
-    cutoff = draw(st.sampled_from([0, 1, 3, 10, 10**9]))
-    return queries, k, cutoff
+    return queries, k
 
 
 @settings(
@@ -101,14 +99,9 @@ def batch_case(draw):
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(case=batch_case())
-def test_two_phase_rank_identical_to_exhaustive(spark, tiny_index, case):
-    queries, k, cutoff = case
+def test_search_join_rank_identical_to_exhaustive(spark, tiny_index, case):
+    queries, k = case
     want = _ranked(tiny_index.search(queries, k=k, mode="exhaustive", round_to=4))
     qdf = spark.createDataFrame(pd.DataFrame(queries, columns=["query_id", "text"]))
-    got = _ranked(
-        tiny_index.search_join(
-            qdf, k=k, round_to=4, two_phase=True, head_df_cutoff=cutoff
-        )
-    )
-    assert tiny_index._last_join_two_phase is True
-    assert got == want, (queries, k, cutoff)
+    got = _ranked(tiny_index.search_join(qdf, k=k, round_to=4))
+    assert got == want, (queries, k)

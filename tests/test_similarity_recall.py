@@ -57,6 +57,14 @@ def test_probe_knob_is_monotone(spark, emb, queries, exact):
     assert r[1] >= 0.3  # single-bucket probe is not vacuous either
 
 
+def test_probe_recall_curve_empty_probe_list(spark, emb, queries):
+    """An explicit empty probe list measures nothing and returns an
+    empty curve — no error from sizing a worker pool to zero."""
+    from pylate_spark.operators.similarity import probe_recall_curve
+
+    assert probe_recall_curve(emb, queries, k=K, n_planes=N_PLANES, probes=[]) == []
+
+
 def test_target_recall_auto_probe(spark, emb, queries, exact):
     """target_recall picks n_probe from the measured curve: asking for
     0.9 must ACHIEVE >= 0.9 (on the calibration distribution), and the
