@@ -49,6 +49,10 @@ from pylate_spark.plans.segments import SEGMENT_SCHEMA, arrow_carry_iterator
 MANIFEST = "manifest.json"
 
 
+def _now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+
+
 @dataclass
 class IndexPaths:
     """Index directory layout. ``root`` may be a plain local path or
@@ -206,7 +210,7 @@ def _stage_corpus(
     text_col: str,
     docid_base: int = 0,
     staging_dir: str | None = None,
-) -> None:
+) -> int | None:
     """Write the staged corpus ``(batch, shard, docid, url, dl, text)``
     partitioned by batch. ``dl`` is computed with the *native*
     ``regexp_extract_all`` so corpus stats never re-tokenize (the UDF
@@ -222,7 +226,8 @@ def _stage_corpus(
     dense (max docid == row count - 1) before the caller commits the
     staging manifest entry — the cheap guard for the "input must be
     deterministically re-readable" contract of the two-pass docid
-    assignment."""
+    assignment. Returns the highest batch id among the rows just staged
+    (None for an empty input), read off the same guard scan."""
     # project to the two columns the build needs before any exchange —
     # html and other payload columns would otherwise ride through the
     # exchange and the staging write (Catalyst prunes scans, but the
@@ -264,6 +269,7 @@ def _stage_corpus(
         F.count(F.lit(1)).alias("n"),
         F.max("docid").alias("mx"), F.min("docid").alias("mn"),
         F.sum(d38).alias("s1"), F.sum(d38 * d38).alias("s2"),
+        F.max("batch").alias("top"),
     ).collect()[0]
     n = int(g["n"] or 0)
     if n:
@@ -280,6 +286,18 @@ def _stage_corpus(
                 f"sum={g['s1']} (want {want_s1}), sumsq={g['s2']} (want {want_s2}), "
                 f"base={docid_base} — is the input DataFrame deterministic across reads?"
             )
+        return int(g["top"])
+    return None
+
+
+def _doc_stats() -> list:
+    """Aggregates over staged rows: doc count, tokenized-doc count
+    (``dl > 0`` — the docs BM25's N counts) and total length."""
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("n_docs_tokenized"),
+        F.sum("dl").alias("sum_dl"),
+    ]
 
 
 def _build_one_batch(
@@ -343,11 +361,7 @@ def _build_one_batch(
         )
         .collect()[0]
     )
-    d = (
-        staged.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"),
-                   F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("n_docs_tokenized"))
-        .collect()[0]
-    )
+    d = staged.agg(*_doc_stats()).collect()[0]
     dt = time.time() - t0
     n_post = int(m["n_postings"] or 0)
     nbytes = int(m["bytes"] or 0)
@@ -364,36 +378,44 @@ def _build_one_batch(
         "docs_per_sec": round(int(d["n_docs"]) / dt, 1) if dt > 0 else None,
         "postings_per_sec": round(n_post / dt, 1) if dt > 0 else None,
         "bytes_per_posting": round(nbytes / n_post, 3) if n_post else None,
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "committed_at": _now(),
     }
 
 
-def _tombstone_deltas(spark: SparkSession, paths: IndexPaths, manifest: dict):
-    """(per-term df/cf deltas DF, n_deleted_tokenized, deleted sum_dl)
-    for all tombstoned docids, recomputed exactly from staged text.
-    Returns (None, 0, 0) when there are no tombstones."""
-    config = IndexConfig.from_dict(manifest["config"])
-    tomb_dir = active_dir(paths, manifest, "tombstones")
-    if not storage.exists(tomb_dir):
-        return None, 0, 0
-    tomb = spark.read.parquet(tomb_dir).distinct()
-    staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
-    deleted = staged.join(F.broadcast(tomb), "docid", "inner")
-    from pylate_spark.functions.tokenize import terms_long as _tl
+def _geometry(manifest: dict) -> tuple[IndexConfig, int]:
+    """(config, shards_per_batch) as staging committed them. Every step
+    after staging reads the geometry here, never from a caller; a
+    manifest without the batch span gets the build default of 64."""
+    return IndexConfig.from_dict(manifest["config"]), int(manifest.get("shards_per_batch", 64))
 
+
+def _subtract_deleted(
+    spark: SparkSession, paths: IndexPaths, manifest: dict, ts: DataFrame, docids: DataFrame
+) -> tuple[DataFrame, int, int]:
+    """Subtract the documents in ``docids`` from term stats ``ts``: the
+    per-term df/cf deltas are recomputed exactly from their staged
+    text. Returns (adjusted term stats, number of deleted tokenized
+    docs, their sum_dl)."""
+    pattern = _geometry(manifest)[0].token_pattern
+    staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
+    deleted = staged.join(F.broadcast(docids), "docid", "inner")
     deltas = (
-        _tl(deleted.select("docid", "text"), pattern=config.token_pattern)
+        terms_long(deleted.select("docid", "text"), pattern=pattern)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df_del"), F.sum("tf").alias("cf_del"))
     )
-    d = deleted.agg(
-        F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("n"),
-        F.sum("dl").alias("sum_dl"),
-    ).collect()[0]
-    return deltas, int(d["n"] or 0), int(d["sum_dl"] or 0)
+    ts = (
+        ts.join(F.broadcast(deltas), "term", "left")
+        .withColumn("df", F.col("df") - F.coalesce(F.col("df_del"), F.lit(0)))
+        .withColumn("cf", F.col("cf") - F.coalesce(F.col("cf_del"), F.lit(0)))
+        .drop("df_del", "cf_del")
+        .where(F.col("df") > 0)
+    )
+    d = deleted.agg(*_doc_stats()).collect()[0]
+    return ts, int(d["n_docs_tokenized"] or 0), int(d["sum_dl"] or 0)
 
 
-def _finalize(spark: SparkSession, paths: IndexPaths, config: IndexConfig, manifest: dict) -> dict:
+def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
     """Global term stats (SPIMI merge bookkeeping), docmap, corpus stats.
     Tombstoned documents are subtracted exactly, so re-finalizing after
     an incremental add preserves delete semantics. term_stats and docmap
@@ -411,20 +433,15 @@ def _finalize(spark: SparkSession, paths: IndexPaths, config: IndexConfig, manif
             F.count(F.lit(1)).alias("merge_fan_in"),
         )
     )
-    deltas, n_del, dl_del = _tombstone_deltas(spark, paths, manifest)
-    if deltas is not None:
-        ts = (
-            ts.join(F.broadcast(deltas), "term", "left")
-            .withColumn("df", F.col("df") - F.coalesce(F.col("df_del"), F.lit(0)))
-            .withColumn("cf", F.col("cf") - F.coalesce(F.col("cf_del"), F.lit(0)))
-            .drop("df_del", "cf_del")
-            .where(F.col("df") > 0)
-        )
-    staging_dir = active_dir(paths, manifest, "staging")
+    n_del = dl_del = 0
+    tomb_dir = active_dir(paths, manifest, "tombstones")
+    if storage.exists(tomb_dir):
+        tomb = spark.read.parquet(tomb_dir).distinct()
+        ts, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, tomb)
     ts_dir = storage.join(paths.root, bump_dir(manifest, "term_stats"))
     ts.write.mode("overwrite").parquet(ts_dir)
 
-    staged = spark.read.parquet(staging_dir)
+    staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
     dm_dir = storage.join(paths.root, bump_dir(manifest, "docmap"))
     staged.select("url", "docid", "shard", "dl").write.mode("overwrite").parquet(dm_dir)
 
@@ -436,7 +453,6 @@ def _finalize(spark: SparkSession, paths: IndexPaths, config: IndexConfig, manif
     ).collect()[0]
     manifest.update(
         {
-            "config": config.to_dict(),
             "n_docs": n_docs,
             "sum_dl": sum_dl,
             "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
@@ -451,6 +467,21 @@ def _finalize(spark: SparkSession, paths: IndexPaths, config: IndexConfig, manif
     save_manifest(paths, manifest)  # atomic commit incl. the dir flips
     gc_stale_versions(paths, manifest)
     return manifest
+
+
+def _commit_batches(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
+    """Build every staged batch the manifest has not committed, each
+    followed by its own durable manifest commit, then finalize. The one
+    commit path for a build, a resumed build, an add, a resumed add and
+    compact's re-finalize; it reads the geometry from the manifest."""
+    config, spb = _geometry(manifest)
+    for batch in range(manifest["n_batches"]):
+        key = str(batch)
+        if manifest["batches"].get(key, {}).get("status") == "committed":
+            continue
+        manifest["batches"][key] = _build_one_batch(spark, paths, config, batch, spb, manifest)
+        save_manifest(paths, manifest)  # per-batch durable commit point
+    return _finalize(spark, paths, manifest)
 
 
 def build_index(
@@ -468,9 +499,10 @@ def build_index(
     Returns the final manifest. Idempotent per batch: a killed build
     rerun with ``resume=True`` skips committed batches (the kill/rerun
     test mirrors the reference's resume discipline,
-    ``collection_indexer.py:64-71``).
+    ``collection_indexer.py:64-71``). ``config`` and ``shards_per_batch``
+    set the geometry of a fresh build; once staging has committed it to
+    the manifest, a resume uses the persisted values and ignores them.
     """
-    config = config or IndexConfig()
     paths = IndexPaths(index_dir)
     manifest = load_manifest(paths) if resume else {}
     if manifest.get("finalized"):
@@ -480,40 +512,24 @@ def build_index(
     storage.makedirs(paths.root)
 
     if not manifest.get("staged"):
+        config = config or IndexConfig()
         staging_dir = active_dir(paths, manifest, "staging")
         storage.rmtree(staging_dir)  # killed mid-staging → redo atomically
-        _stage_corpus(
+        top = _stage_corpus(
             spark, pages, paths, config, shards_per_batch, key_col, text_col,
             staging_dir=staging_dir,
         )
-        n_batches = (
-            spark.read.parquet(staging_dir).agg(F.max("batch")).collect()[0][0] or 0
-        ) + 1
         manifest = {
             "staged": True,
-            "n_batches": int(n_batches),
+            "n_batches": (top or 0) + 1,
             "config": config.to_dict(),
             # the batch geometry is part of the physical plan: docid →
             # batch mapping must stay stable across incremental adds
-            # (add_documents validates against this persisted value)
+            # (every later step reads it back via _geometry)
             "shards_per_batch": int(shards_per_batch),
             "batches": {},
-            "lineage": [
-                {
-                    "stage": "staging",
-                    "at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    "source": "caller DataFrame",
-                }
-            ],
+            "lineage": [{"stage": "staging", "at": _now(), "source": "caller DataFrame"}],
         }
         save_manifest(paths, manifest)
 
-    for batch in range(manifest["n_batches"]):
-        key = str(batch)
-        if manifest["batches"].get(key, {}).get("status") == "committed":
-            continue
-        entry = _build_one_batch(spark, paths, config, batch, shards_per_batch, manifest)
-        manifest["batches"][key] = entry
-        save_manifest(paths, manifest)  # per-batch durable commit point
-
-    return _finalize(spark, paths, config, manifest)
+    return _commit_batches(spark, paths, manifest)

@@ -37,44 +37,27 @@ Idempotence / replay contract (used by streaming ingest):
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pylate_spark import storage
-from pylate_spark.config import IndexConfig
-from pylate_spark.functions.tokenize import terms_long
 from pylate_spark.plans.build import (
     IndexPaths,
-    _build_one_batch,
-    _finalize,
+    _commit_batches,
+    _doc_stats,
+    _geometry,
+    _now,
     _stage_corpus,
+    _subtract_deleted,
     active_dir,
+    build_index,
     bump_dir,
     gc_stale_versions,
     load_manifest,
     save_manifest,
 )
-
-
-def _now() -> str:
-    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-
-
-def _persisted_spb(manifest: dict, caller_value: int | None) -> int:
-    """The batch geometry fixed at build time. A caller-supplied value
-    is validated, never trusted: deriving batch numbers from a
-    different shards_per_batch than the build's would collide new batch
-    ids with committed manifest entries (silently dropping the docs)."""
-    spb = int(manifest.get("shards_per_batch", caller_value or 64))
-    if caller_value is not None and caller_value != spb:
-        raise ValueError(
-            f"index was built with shards_per_batch={spb}; "
-            f"got {caller_value} — omit the argument to reuse the built geometry"
-        )
-    return spb
+from pylate_spark.plans.segments import SEGMENT_SCHEMA
 
 
 def _purge_staged_batches(staging_dir: str, first_batch: int) -> None:
@@ -157,11 +140,26 @@ def _repair_pending_add(paths: IndexPaths, manifest: dict) -> dict:
     return manifest
 
 
+def _open(index_dir: str) -> tuple[IndexPaths, dict]:
+    """The one entry step of every mutation of a finalized index: load
+    the manifest, refuse an index with an incomplete add, and repair a
+    crashed pending add's orphan staged rows."""
+    paths = IndexPaths(index_dir)
+    manifest = load_manifest(paths)
+    if not manifest.get("finalized"):
+        # re-staging would duplicate the interrupted add's docs; any
+        # other mutation would finalize over its uncommitted batches
+        raise ValueError(
+            "index has an incomplete add in progress; call "
+            "resume_add(spark, index_dir) to finish it, then retry"
+        )
+    return paths, _repair_pending_add(paths, manifest)
+
+
 def add_documents(
     spark: SparkSession,
     new_pages: DataFrame,
     index_dir: str,
-    shards_per_batch: int | None = None,
     key_col: str = "url",
     text_col: str = "text",
     epoch_key: str | None = None,
@@ -174,7 +172,9 @@ def add_documents(
     committed, so (a) existing committed batches are untouched, (b)
     every (shard, term) run stays unique — no cross-batch posting merge
     is ever needed at query time — and (c) batch ids never collide even
-    after a compact emptied the trailing batch.
+    after a compact emptied the trailing batch. The batch geometry
+    (config, ``shards_per_batch``) is the one the build persisted in
+    the manifest; an add takes no geometry of its own.
 
     ``epoch_key`` makes the add idempotent per key (exactly-once under
     Structured Streaming epoch replay): an already-applied key returns
@@ -186,23 +186,11 @@ def add_documents(
     leave it False for arbitrary caller keys, which keep exact
     per-key semantics.
     """
-    paths = IndexPaths(index_dir)
-    manifest = load_manifest(paths)
-    if not manifest.get("finalized"):
-        # a previous add died mid-build: re-staging the same docs would
-        # duplicate them under a second docid range — the caller must
-        # first complete the interrupted add (without re-passing docs)
-        raise ValueError(
-            "index has an incomplete add in progress; call "
-            "resume_add(spark, index_dir) to finish it, then retry"
-        )
+    paths, manifest = _open(index_dir)
     if epoch_key is not None and _epoch_applied(manifest, epoch_key, epoch_monotonic):
         return manifest  # replayed epoch whose rows already committed
-    config = IndexConfig.from_dict(manifest["config"])
-    spb = _persisted_spb(manifest, shards_per_batch)
+    config, spb = _geometry(manifest)
     batch_span = config.shard_size * spb
-
-    manifest = _repair_pending_add(paths, manifest)
 
     staging_dir = active_dir(paths, manifest, "staging")
     cur_max = int(
@@ -222,14 +210,11 @@ def add_documents(
     }
     save_manifest(paths, manifest)
 
-    _stage_corpus(
+    top = _stage_corpus(
         spark, new_pages, paths, config, spb, key_col, text_col,
         docid_base=docid_base, staging_dir=staging_dir,
     )
-    n_batches = int(
-        spark.read.parquet(staging_dir).agg(F.max("batch")).collect()[0][0]
-    ) + 1
-    manifest["n_batches"] = n_batches
+    manifest["n_batches"] = (cur_max // batch_span if top is None else top) + 1
     manifest["finalized"] = False
     manifest.pop("pending_add", None)
     if epoch_key is not None:
@@ -241,40 +226,23 @@ def add_documents(
          "docid_base": docid_base, "epoch_key": epoch_key}
     )
     save_manifest(paths, manifest)
-
-    for batch in range(n_batches):
-        key = str(batch)
-        if manifest["batches"].get(key, {}).get("status") == "committed":
-            continue
-        manifest["batches"][key] = _build_one_batch(spark, paths, config, batch, spb, manifest)
-        save_manifest(paths, manifest)
-    return _finalize(spark, paths, config, manifest)
+    return _commit_batches(spark, paths, manifest)
 
 
-def resume_add(
-    spark: SparkSession, index_dir: str, shards_per_batch: int | None = None
-) -> dict:
+def resume_add(spark: SparkSession, index_dir: str) -> dict:
     """Complete an interrupted ``add_documents`` (or initial build that
     was staged but killed mid-batches): builds every uncommitted batch
-    from the already-staged corpus and re-finalizes. Idempotent — the
-    staged rows carry their docids, so no re-staging and no duplicates
-    (the resume discipline of ``collection_indexer.py:64-71``)."""
+    from the already-staged corpus, under the geometry persisted in the
+    manifest, and re-finalizes. Idempotent — the staged rows carry
+    their docids, so no re-staging and no duplicates (the resume
+    discipline of ``collection_indexer.py:64-71``)."""
     paths = IndexPaths(index_dir)
-    manifest = load_manifest(paths)
-    manifest = _repair_pending_add(paths, manifest)
+    manifest = _repair_pending_add(paths, load_manifest(paths))
     if manifest.get("finalized"):
         return manifest
     if not manifest.get("staged"):
         raise ValueError("nothing staged at this index dir; use build_index")
-    config = IndexConfig.from_dict(manifest["config"])
-    spb = _persisted_spb(manifest, shards_per_batch)
-    for batch in range(manifest["n_batches"]):
-        key = str(batch)
-        if manifest["batches"].get(key, {}).get("status") == "committed":
-            continue
-        manifest["batches"][key] = _build_one_batch(spark, paths, config, batch, spb, manifest)
-        save_manifest(paths, manifest)
-    return _finalize(spark, paths, config, manifest)
+    return _commit_batches(spark, paths, manifest)
 
 
 def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> dict:
@@ -288,12 +256,7 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     then-crash protocol would instead make the retry a silent no-op via
     the double-delete guard, permanently desynchronizing stats from the
     tombstone filter)."""
-    paths = IndexPaths(index_dir)
-    manifest = load_manifest(paths)
-    if not manifest.get("finalized"):
-        raise ValueError("delete_documents requires a finalized index")
-    manifest = _repair_pending_add(paths, manifest)
-    config = IndexConfig.from_dict(manifest["config"])
+    paths, manifest = _open(index_dir)
 
     ids_df = spark.createDataFrame([(int(d),) for d in docids], "docid long").distinct()
     tomb_dir = active_dir(paths, manifest, "tombstones")
@@ -310,34 +273,14 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
         storage.join(paths.root, bump_dir(manifest, "tombstones"))
     )
 
-    # exact per-term df/cf deltas from the deleted docs' staged text
-    staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
-    deleted = staged.join(F.broadcast(ids_df), "docid", "inner")
-    deltas = (
-        terms_long(deleted.select("docid", "text"), pattern=config.token_pattern)
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_del"), F.sum("tf").alias("cf_del"))
-    )
     ts = spark.read.parquet(active_dir(paths, manifest, "term_stats"))
-    new_ts = (
-        ts.join(F.broadcast(deltas), "term", "left")
-        .withColumn("df", F.col("df") - F.coalesce(F.col("df_del"), F.lit(0)))
-        .withColumn("cf", F.col("cf") - F.coalesce(F.col("cf_del"), F.lit(0)))
-        .drop("df_del", "cf_del")
-        .where(F.col("df") > 0)
-    )
+    new_ts, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, ids_df)
     # versioned rewrite: write the new stats dir, flip the pointer in
     # the same manifest commit as the stats update below (no
     # delete-then-move window), GC the old version after
     new_ts.write.mode("overwrite").parquet(
         storage.join(paths.root, bump_dir(manifest, "term_stats"))
     )
-
-    d = deleted.agg(
-        F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("n"),
-        F.sum("dl").alias("sum_dl"),
-    ).collect()[0]
-    n_del, dl_del = int(d["n"] or 0), int(d["sum_dl"] or 0)
     sum_dl = manifest.get("sum_dl", round(manifest["avgdl"] * manifest["n_docs"]))
     manifest["n_docs"] = manifest["n_docs"] - n_del
     manifest["sum_dl"] = sum_dl - dl_del
@@ -359,10 +302,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     the segments table, clear tombstones, re-finalize stats — the
     analog of the reference's chunk rewrite on delete
     (``index_updater.py:414-460``)."""
-    paths = IndexPaths(index_dir)
-    manifest = load_manifest(paths)
-    config = IndexConfig.from_dict(manifest["config"])
-    manifest = _repair_pending_add(paths, manifest)
+    paths, manifest = _open(index_dir)
     tomb_dir = active_dir(paths, manifest, "tombstones")
     if not storage.exists(tomb_dir):
         return manifest
@@ -372,7 +312,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     if tomb.size == 0:
         return manifest
     tomb_bc = spark.sparkContext.broadcast(tomb)
-    block_size = config.block_size
+    block_size = _geometry(manifest)[0].block_size
 
     def rewrite(batches):
         import pyarrow as pa
@@ -419,8 +359,6 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
                 block_size,
             )
 
-    from pylate_spark.plans.segments import SEGMENT_SCHEMA
-
     new = (
         spark.read.parquet(active_dir(paths, manifest, "segments"))
         .drop("batch")
@@ -451,24 +389,21 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
         int(r["batch"]): r
         for r in spark.read.parquet(new_stg_dir)
         .groupBy("batch")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("n_docs_tokenized"),
-            F.sum("dl").alias("sum_dl"),
-        )
+        .agg(*_doc_stats())
         .collect()
     }
     for key, entry in manifest.get("batches", {}).items():
         r = per_batch.get(int(key))
-        entry["n_docs"] = int(r["n_docs"]) if r is not None else 0
-        entry["n_docs_tokenized"] = int(r["n_docs_tokenized"]) if r is not None else 0
-        entry["sum_dl"] = int(r["sum_dl"]) if r is not None else 0
+        for f in ("n_docs", "n_docs_tokenized", "sum_dl"):
+            entry[f] = int(r[f]) if r is not None else 0
     manifest.setdefault("lineage", []).append(
         {"stage": "compact", "at": _now(), "n_tombstones_purged": int(tomb.size)}
     )
     save_manifest(paths, manifest)  # commit point: both dir flips live
     gc_stale_versions(paths, manifest)
-    manifest = _finalize(spark, paths, config, manifest)
+    # every batch is committed (an incomplete add was refused above), so
+    # this only re-finalizes
+    manifest = _commit_batches(spark, paths, manifest)
     # per-batch n_postings/bytes are stale after the rewrite (postings
     # moved to batch=0); refresh the manifest-level totals from the
     # rewritten segments so build metrics stay truthful
@@ -480,7 +415,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     manifest["n_postings"] = int(m["p"] or 0)
     manifest["bytes"] = int(m["b"] or 0)
     save_manifest(paths, manifest)
-    # tombstones are cleared LAST — only after the dir flips, _finalize
+    # tombstones are cleared LAST — only after the dir flips, the re-finalize
     # (docmap/stats rebuild) and the metrics refresh are all durable. A
     # crash anywhere before this line leaves the tombstone set intact,
     # so a re-run redoes the whole compact (as a no-op posting filter)
@@ -503,7 +438,6 @@ def rebuild_index(
     spark: SparkSession,
     index_dir: str,
     dst_dir: str,
-    shards_per_batch: int | None = None,
 ) -> dict:
     """Physically rebuild the index's live snapshot into ``dst_dir``
     with a FRESH dense docid space — the docid-renumbering analog of
@@ -521,24 +455,18 @@ def rebuild_index(
     flip in the serving layer is the same commit discipline the
     manifest uses for state dirs). External docid references (subsets,
     qrels keyed by docid) must be re-resolved through the new docmap
-    via url.
+    via url. The new index keeps the source's geometry (config and
+    ``shards_per_batch`` from its manifest).
 
     Returns the new manifest at ``dst_dir``."""
-    paths = IndexPaths(index_dir)
-    manifest = load_manifest(paths)
-    if not manifest.get("finalized"):
-        raise ValueError("rebuild_index requires a finalized index")
-    manifest = _repair_pending_add(paths, manifest)
-    config = IndexConfig.from_dict(manifest["config"])
-    spb = _persisted_spb(manifest, shards_per_batch)
+    paths, manifest = _open(index_dir)
+    config, spb = _geometry(manifest)
 
     live = spark.read.parquet(active_dir(paths, manifest, "staging"))
     tomb_dir = active_dir(paths, manifest, "tombstones")
     if storage.exists(tomb_dir):
         tomb = spark.read.parquet(tomb_dir).distinct()
         live = live.join(F.broadcast(tomb), "docid", "left_anti")
-
-    from pylate_spark.plans.build import build_index
 
     new_manifest = build_index(
         spark, live.select("url", "text"), dst_dir, config=config, shards_per_batch=spb
@@ -566,11 +494,7 @@ def consolidate_segments(spark: SparkSession, index_dir: str) -> dict:
     so consolidation is a pure file merge, the trivial-fan-in SPIMI
     merge at the storage layer. Reference analog: chunk consolidation
     in ``index_updater.py:414-460`` minus the recompression."""
-    paths = IndexPaths(index_dir)
-    manifest = load_manifest(paths)
-    if not manifest.get("finalized"):
-        raise ValueError("consolidate_segments requires a finalized index")
-    manifest = _repair_pending_add(paths, manifest)
+    paths, manifest = _open(index_dir)
     seg = spark.read.parquet(active_dir(paths, manifest, "segments")).drop("batch")
     new_seg_dir = storage.join(paths.root, bump_dir(manifest, "segments"))
     (

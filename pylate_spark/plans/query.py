@@ -531,6 +531,12 @@ def bm25_scan_topk(
     global — the reference's subset semantics, fast_plaid.py:318-340);
     ``conjunctive`` keeps only docs matching every query term (AND
     mode; BM25 default is disjunctive).
+
+    Caveat (same as :meth:`InvertedIndex.search_join`): the query-term
+    postings are pinned with a lazy ``localCheckpoint``, whose blocks
+    are NOT recomputable — on a non-local master, losing an executor
+    mid-run fails the job with a missing-checkpoint-block error
+    instead of recomputing.
     """
     from pylate_spark.functions.tokenize import native_tokens_col
 

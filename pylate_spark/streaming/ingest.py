@@ -26,7 +26,6 @@ def stream_index_updates(
     pages_stream: DataFrame,
     index_dir: str,
     checkpoint_dir: str,
-    shards_per_batch: int | None = None,
     trigger_seconds: int | None = None,
     key_col: str = "url",
     text_col: str = "text",
@@ -47,8 +46,7 @@ def stream_index_updates(
     marker and its partial rows are purged before the redo; an attempt
     that crashed mid-build is completed (``resume_add``) *before* the
     replay decision, at which point its epoch key is already recorded.
-    ``shards_per_batch`` defaults to the geometry persisted at build
-    time (passing a different value raises).
+    Every add uses the batch geometry persisted in the index manifest.
     """
     from pylate_spark.plans.build import IndexPaths, load_manifest
     from pylate_spark.plans.maintenance import add_documents, resume_add
@@ -70,7 +68,6 @@ def stream_index_updates(
             spark,
             batch_df,
             index_dir,
-            shards_per_batch=shards_per_batch,
             key_col=key_col,
             text_col=text_col,
             epoch_key=f"{checkpoint_dir}#{epoch_id}",

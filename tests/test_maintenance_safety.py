@@ -1,7 +1,8 @@
 """Regression tests for the round-2 maintenance-safety fixes:
 
 - batch-geometry persistence (an add with a different shards_per_batch
-  used to allocate colliding batch ids and silently drop the new docs);
+  used to allocate colliding batch ids and silently drop the new docs;
+  adds now take the geometry only from the manifest);
 - batch-id allocation past compact-emptied trailing batches;
 - epoch-idempotent adds (exactly-once under Structured Streaming epoch
   replay, including the crash-between-staging-and-manifest window);
@@ -39,18 +40,36 @@ def _n_hits(spark, d, text="the"):
     return InvertedIndex(spark, d).search([(0, text)], k=10_000).count()
 
 
-def test_add_rejects_mismatched_geometry(spark, tmp_path):
-    """The ADVICE repro: build with spb=2, add with spb=8 used to
-    allocate colliding batch ids → new docs silently never indexed.
-    Now: explicit error; omitting the arg reuses the built geometry."""
+def test_add_reuses_built_geometry(spark, tmp_path):
+    """Build with spb=2, then add: an add with a different spb used to
+    allocate colliding batch ids → new docs silently never indexed. An
+    add takes no geometry of its own; it reuses the built one."""
     d = _build(spark, str(tmp_path / "idx"))
     extra = spark.createDataFrame(synth_pages_pandas(16, seed=7))
-    with pytest.raises(ValueError, match="shards_per_batch=2"):
-        add_documents(spark, extra, d, shards_per_batch=8)
     n_before = _n_hits(spark, d)
     m = add_documents(spark, extra, d)  # geometry from the manifest
     assert m["n_docs"] == 64 + 16
     assert _n_hits(spark, d) > n_before  # new docs actually searchable
+
+
+def test_add_to_manifest_without_batch_span(spark, tmp_path):
+    """A manifest written before shards_per_batch was persisted: an add
+    falls back to the build default of 64 shards per batch, so the new
+    docs start at the next 64-shard batch boundary and are searchable."""
+    d = _build(spark, str(tmp_path / "idx"))
+    paths = IndexPaths(d)
+    manifest = load_manifest(paths)
+    del manifest["shards_per_batch"]
+    save_manifest(paths, manifest)
+    n_before = _n_hits(spark, d)
+    m = add_documents(spark, spark.createDataFrame(synth_pages_pandas(16, seed=7)), d)
+    assert m["n_docs"] == 64 + 16
+    span = CFG.shard_size * 64
+    assert m["batches"]["1"]["status"] == "committed" and m["batches"]["1"]["n_docs"] == 16
+    docmap = spark.read.parquet(active_dir(paths, m, "docmap"))
+    assert docmap.where(f"docid >= {span}").agg({"docid": "min"}).collect()[0][0] == span
+    assert docmap.where(f"docid >= {span}").count() == 16
+    assert _n_hits(spark, d) > n_before
 
 
 def test_add_after_compact_emptied_trailing_batch(spark, tmp_path):
@@ -129,19 +148,19 @@ def test_add_replay_after_crash_mid_build(spark, tmp_path):
     paths = IndexPaths(d)
     extra_pdf = synth_pages_pandas(16, seed=5)
 
-    import pylate_spark.plans.maintenance as M
+    import pylate_spark.plans.build as B
 
-    orig = M._build_one_batch
+    orig = B._build_one_batch
 
     def dying(spark_, paths_, config_, batch_, spb_, manifest_):
         raise RuntimeError("kill")
 
-    M._build_one_batch = dying
+    B._build_one_batch = dying  # the one batch-build call site
     try:
-        with pytest.raises(RuntimeError):
+        with pytest.raises(RuntimeError, match="kill"):
             add_documents(spark, spark.createDataFrame(extra_pdf), d, epoch_key="ckpt#2", epoch_monotonic=True)
     finally:
-        M._build_one_batch = orig
+        B._build_one_batch = orig
     # replay discipline (what the streaming sink does):
     m = load_manifest(paths)
     assert not m.get("finalized")

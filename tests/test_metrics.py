@@ -87,7 +87,7 @@ def test_consolidate_segments(spark, tmp_path):
     d = str(tmp_path / "idx")
     cfg = IndexConfig(shard_size=64, block_size=32, term_buckets=8)
     build_index(spark, spark.createDataFrame(synth_pages_pandas(200)), d, config=cfg, shards_per_batch=2)
-    add_documents(spark, spark.createDataFrame(synth_pages_pandas(100, seed=9)), d, shards_per_batch=2)
+    add_documents(spark, spark.createDataFrame(synth_pages_pandas(100, seed=9)), d)
     q = [(0, "the w00004"), (1, "w00001 w00002")]
     from pylate_spark.plans.build import IndexPaths, active_dir, load_manifest
 

@@ -30,9 +30,7 @@ def test_stream_index_updates(spark, tmp_path):
     spark.createDataFrame(extra).write.mode("overwrite").parquet(str(src / "f1"))
 
     stream = spark.readStream.schema(PAGES_SCHEMA).parquet(str(src / "f1"))
-    q = stream_index_updates(
-        stream, idx_dir, checkpoint_dir=str(tmp_path / "ckpt"), shards_per_batch=2
-    )
+    q = stream_index_updates(stream, idx_dir, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     idx = InvertedIndex(spark, idx_dir)
@@ -42,9 +40,7 @@ def test_stream_index_updates(spark, tmp_path):
 
     # restart with the same checkpoint: no re-ingest (exactly-once)
     stream2 = spark.readStream.schema(PAGES_SCHEMA).parquet(str(src / "f1"))
-    q2 = stream_index_updates(
-        stream2, idx_dir, checkpoint_dir=str(tmp_path / "ckpt"), shards_per_batch=2
-    )
+    q2 = stream_index_updates(stream2, idx_dir, checkpoint_dir=str(tmp_path / "ckpt"))
     q2.awaitTermination(60)
     assert InvertedIndex(spark, idx_dir).n_docs == before + 80
 
