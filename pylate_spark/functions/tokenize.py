@@ -66,6 +66,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pylate_spark.worker import forget_archive_importers
+
 #: rounds-1-5 token definition (backward-compatible indexes)
 ASCII_TOKEN_PATTERN = r"[a-z0-9]+"
 
@@ -173,6 +175,7 @@ def token_sql(col_sql: str = "text", pattern: str = TOKEN_PATTERN) -> str:
 
 
 def _tokenize_series(texts: pd.Series, pattern: str) -> pd.Series:
+    forget_archive_importers()
     prepped = texts.str.lower()
     if _needs_fold(pattern):
         prepped = prepped.str.replace(_FINAL_SIGMA, _SIGMA, regex=False).str.replace(
@@ -206,6 +209,7 @@ def nfc_normalize_udf(texts: pd.Series) -> pd.Series:
     see the module docstring for why."""
     import unicodedata
 
+    forget_archive_importers()
     return texts.map(
         lambda t: unicodedata.normalize("NFC", t) if isinstance(t, str) else t
     )

@@ -198,7 +198,14 @@ def lsh_candidate_pairs(
     on a (doc_id, term) shuffle, measured 2× slower; (b)
     collect_list(doc_id)-per-bucket + nested-transform pair explode —
     materializes a C(n,2) struct array per mega-bucket in ONE row.
-    The join streams its pairs instead."""
+    The join streams its pairs instead.
+
+    Caveat: the banded signatures are pinned with a lazy
+    ``localCheckpoint``, whose blocks are NOT recomputable — on a
+    non-local master, losing an executor mid-run fails the job with a
+    missing-checkpoint-block error instead of recomputing. Under AQE
+    the pin's shuffle stages (the guard's window counts) run when the
+    operator is called; the pair join reads their output."""
     wide = _signature_wide(df, n_hashes, id_col=id_col, text_col=text_col)
     n_bands = (n_hashes + band_size - 1) // band_size
 
@@ -247,14 +254,15 @@ def lsh_candidate_pairs(
         "doc_id", *carry, F.col("p.band").alias("band"), F.col("p.band_hash").alias("band_hash")
     )
     # the banded-signature subplan is referenced by BOTH sides of the
-    # self-join: persist it so the expensive part — tokenize +
-    # n_hashes md5 projections over the corpus — runs once per job
-    # instead of once per reference (r7, guide §1.2/§2.4: measured 2
-    # signature passes in the round-6 plan). The cached set is ~100
-    # B/row·n_bands, orders of magnitude below the corpus; it is
-    # operator-internal and freed by the ContextCleaner when the
-    # result DataFrame is dropped.
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    # self-join: pin it so the expensive part — tokenize + n_hashes md5
+    # projections over the corpus — runs once per job instead of once
+    # per reference (r7, guide §1.2/§2.4: measured 2 signature passes
+    # in the round-6 plan). The pinned set is ~100 B/row·n_bands. A lazy
+    # localCheckpoint, not a DataFrame persist: the SQL cache manager
+    # keeps a persisted plan until an explicit unpersist, which an
+    # operator returning a lazy DataFrame cannot call; the
+    # ContextCleaner frees the checkpoint once the result is dropped.
+    banded = banded.localCheckpoint(eager=False)
     if guarded:
         surv_own = F.lit(False)
         for b in range(n_bands):
@@ -470,7 +478,12 @@ def simhash_near_dup_pairs(
     :func:`lsh_candidate_pairs` (boilerplate corpora put thousands of
     identical simhashes in one band bucket; route those to
     :func:`exact_dedup`). Default None = exact semantics, what the
-    DuckDB all-pairs oracle checks."""
+    DuckDB all-pairs oracle checks.
+
+    Caveat (same as :func:`lsh_candidate_pairs`): the banded simhashes
+    are pinned with a lazy ``localCheckpoint``, whose blocks are NOT
+    recomputable on executor loss, and under AQE the simhash
+    aggregation below the pin runs when the operator is called."""
     n_bands = max_hamming + 1
     width = (bits + n_bands - 1) // n_bands
     mask = (1 << width) - 1
@@ -505,11 +518,12 @@ def simhash_near_dup_pairs(
         F.col("p.band").alias("band"),
         F.col("p.band_val").alias("band_val"),
     )
-    # persist: the simhash aggregation under ``banded`` is referenced by
-    # both self-join sides (same reasoning as lsh_candidate_pairs — r7,
-    # guide §1.2/§2.4); the cached set is n_bands rows/doc of numeric
+    # pin: the simhash aggregation under ``banded`` is referenced by
+    # both self-join sides (same reasoning and the same lazy
+    # localCheckpoint lifetime as lsh_candidate_pairs — r7, guide
+    # §1.2/§2.4); the pinned set is n_bands rows/doc of numeric
     # columns, tiny next to the token stream it derives from
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    banded = banded.localCheckpoint(eager=False)
     if guarded:
         surv_own = F.lit(False)
         for b in range(n_bands):

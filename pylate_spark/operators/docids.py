@@ -54,6 +54,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pylate_spark.worker import forget_archive_importers
+
 #: boundary-sample size per target partition (the classic range
 #: partitioner's ~20/partition; balance error shrinks as 1/sqrt of it,
 #: and imbalance only costs evenness, never correctness)
@@ -137,6 +139,7 @@ def assign_docids(
 
     @F.pandas_udf("int")
     def bucket_of(keys: pd.Series) -> pd.Series:
+        forget_archive_importers()
         # vectorized binary search; python str comparison is code-point
         # order == Spark's UTF8 binary order for valid UTF-8, so the
         # bucket boundaries and the per-bucket Spark sort agree
@@ -166,6 +169,7 @@ def assign_docids(
 
     @F.pandas_udf("long")
     def offset_of(keys: pd.Series) -> pd.Series:
+        forget_archive_importers()
         # the UDF emits the bucket's cumulative OFFSET rather than the
         # bucket id: offsets are strictly increasing over non-empty
         # buckets, so _off is an equivalent partition/window key — and

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pylate_spark.worker import forget_archive_importers
+
 #: magic-byte prefixes → media type (hex, uppercase as F.hex emits)
 MAGIC = {
     "89504E47": "image/png",
@@ -279,6 +281,7 @@ def image_features(
             # built-in PPM/BMP decoders are a real decode path; only a
             # payload NO tier can decode raises (in featurize)
             Image = None
+        forget_archive_importers()
 
         def featurize(payload: bytes) -> tuple[str, list[float]]:
             """The ``decoder`` label reports what actually produced the

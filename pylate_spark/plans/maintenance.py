@@ -58,6 +58,7 @@ from pylate_spark.plans.build import (
     save_manifest,
 )
 from pylate_spark.plans.segments import SEGMENT_SCHEMA
+from pylate_spark.worker import forget_archive_importers
 
 
 def _purge_staged_batches(staging_dir: str, first_batch: int) -> None:
@@ -320,6 +321,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
         from pylate_spark.functions.codec import decode_postings
         from pylate_spark.plans.segments import blocks_from_row, encode_group_arrow
 
+        forget_archive_importers()
         t = tomb_bc.value
         for rb in batches:
             pdf = pa.Table.from_batches([rb]).to_pandas()

@@ -40,6 +40,7 @@ from pylate_spark.functions.tokenize import (
 )
 from pylate_spark.plans.build import IndexPaths, active_dir, load_manifest
 from pylate_spark.plans.wand import score_shard
+from pylate_spark.worker import forget_archive_importers
 
 def _result_schema(round_to: int | None) -> T.StructType:
     """Kernel output schema: float32 scores by default; float64 when
@@ -174,6 +175,7 @@ class InvertedIndex:
             from pylate_spark.functions.codec import decode_postings
             from pylate_spark.plans.segments import blocks_from_row
 
+            forget_archive_importers()
             cols = ("term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off")
             for pdf in batches:
                 out_d, out_t, out_tf, out_dl = [], [], [], []

@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import types as T
 
 from pylate_spark.functions.codec import PostingBlocks, varint_encode_offsets
+from pylate_spark.worker import forget_archive_importers
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -153,6 +154,7 @@ def arrow_carry_iterator(batches, block_size: int):
     (shard, term, docid) within the partition."""
     import pyarrow as pa
 
+    forget_archive_importers()
     leftover = None
     for rb in batches:
         tbl = pa.Table.from_batches([rb])
@@ -203,6 +205,7 @@ def decode_postings_gen(batches, chunk_rows: int = 1 << 20):
 
     from pylate_spark.functions.codec import decode_postings
 
+    forget_archive_importers()
     cols = ("term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off")
 
     def flush(terms, counts, ds, tfs, dls):

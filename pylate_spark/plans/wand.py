@@ -33,6 +33,7 @@ from pylate_spark.config import BM25Params
 from pylate_spark.functions.bm25 import tfn_np
 from pylate_spark.functions.codec import decode_postings
 from pylate_spark.plans.segments import blocks_from_row
+from pylate_spark.worker import forget_archive_importers
 
 RESULT_COLUMNS = ["query_id", "docid", "score"]
 
@@ -239,6 +240,7 @@ def score_shard(
     cache for typical shard sizes) — no per-query sort/unique over
     posting runs, which dominated kernel time and memory bandwidth.
     """
+    forget_archive_importers()
     if len(pdf) == 0:
         return _empty_result(np.float64 if round_to is not None else np.float32)
     if shard_size is None:

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pylate_spark.worker import forget_archive_importers
+
 # --- fixed vocabulary (FIXTURES.md §1.1) ---------------------------------
 
 HEAD_TERMS: list[str] = [
@@ -152,6 +154,7 @@ def synth_pages(spark: SparkSession, n_docs: int, seed: int = 42, partitions: in
     base = spark.range(0, n_docs, 1, partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_archive_importers()
         for pdf in batches:
             if len(pdf):
                 yield synth_pages_pandas(n_docs, seed=seed, indices=pdf["id"].to_numpy())

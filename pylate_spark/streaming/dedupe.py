@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from pylate_spark.functions.tokenize import native_tokens_col
+from pylate_spark.worker import forget_archive_importers
 
 #: state per content hash: how many copies seen, which key won
 _STATE_SCHEMA = "n_seen long, first_key string"
@@ -68,6 +69,7 @@ def stream_exact_dedupe(
     ttl_ms = (ttl_minutes or 0) * 60_000
 
     def dedupe(key, pdf_iter, state):
+        forget_archive_importers()
         if state.hasTimedOut:
             state.remove()
             return

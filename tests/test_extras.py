@@ -173,6 +173,42 @@ def test_dedup_clusters_releases_edge_cache_when_a_round_raises(spark, monkeypat
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_band_join_pins_are_released_after_results_are_dropped(spark):
+    """lsh_candidate_pairs and simhash_near_dup_pairs pin their banded
+    signatures for the self-join. Called repeatedly on distinct inputs
+    with the results dropped, they must leave no persistent RDD behind
+    once the driver's garbage is collected."""
+    import gc
+    import time
+
+    from pylate_spark.sources.synth import synth_pages_pandas
+
+    sc = spark.sparkContext
+
+    def persistent_ids():
+        # the registry behind getPersistentRDDs(), read as key text: that
+        # call returns a map holding every persisted RDD strongly, which
+        # py4j keeps alive until its asynchronous finalizer runs, so
+        # polling it would itself pin the RDDs being watched
+        keys = sc._jsc.sc().persistentRdds().keySet().mkString(",")
+        return {int(i) for i in keys.split(",") if i}
+
+    before = persistent_ids()
+    for seed in range(3):
+        pdf = synth_pages_pandas(80, seed=100 + seed)[["text"]]
+        docs = spark.createDataFrame(pdf.rename_axis("doc_id").reset_index())
+        guard = {"max_bucket_size": 40} if seed % 2 else {}
+        assert dedup.lsh_candidate_pairs(docs, **guard).collect()
+        assert dedup.simhash_near_dup_pairs(docs, **guard).collect()
+        del docs
+    deadline = time.monotonic() + 90
+    while persistent_ids() - before and time.monotonic() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.25)
+    assert persistent_ids() - before == set()
+
+
 def test_simhash_near_dups_are_close(dup_docs):
     sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(dup_docs).collect()}
     assert sh[0] == sh[1] == sh[4]
