@@ -175,11 +175,11 @@ def q_bm25_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fully distributed query path (scatter by term: distributed
-    tokenize → semi-join-pruned segment decode → join scoring → top-k
-    merge; nothing driver-side) over the SAME built index — value-hash
-    checked against the same DuckDB oracle as the kernel path, so the
-    two plans are pinned rank-identical."""
+    """``search_join`` over a queries DataFrame on the SAME built index:
+    the batch is collected and scored by the exhaustive shard kernel.
+    Value-hash checked against the same DuckDB oracle as the kernel
+    path, so the DataFrame entry point is pinned to the BM25 values
+    independently of the kernel's own tests."""
     from pylate_spark.plans.query import InvertedIndex
 
     return InvertedIndex(spark, _indexed(spark, sf_dir)).search_join(
@@ -188,11 +188,11 @@ def q_bm25_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_join_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distributed path's allow-list: candidates restricted to
+    """``search_join``'s allow-list: candidates restricted to
     docid % 3 == 0 with global corpus stats — must hash-match the same
     subset oracle as the kernel/scan paths (reference semantics,
-    fast_plaid.py:318-340), exercising the subset semi-join on the
-    decode leg."""
+    fast_plaid.py:318-340), with the exhaustive kernel's sorted-array
+    subset mask."""
     from pylate_spark.plans.query import InvertedIndex
 
     idx = InvertedIndex(spark, _indexed(spark, sf_dir))

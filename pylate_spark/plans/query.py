@@ -135,10 +135,6 @@ class InvertedIndex:
         self._qset_bc = None
         #: last search()'s kernel, for lazy closure-size observability
         self._last_kernel = None
-        #: queries are always tokenized with the INDEX's persisted
-        #: token definition (IndexConfig.tokenizer) — a query must see
-        #: the terms the build wrote
-        self._tokenize_udf = make_tokenize_udf(self.config.token_pattern)
         if tomb is not None and tomb.size >= TOMBSTONE_COMPACT_ADVICE:
             import warnings
 
@@ -349,43 +345,6 @@ class InvertedIndex:
 
         return len(cloudpickle.dumps(self._last_kernel))
 
-    def _decoded_postings(
-        self,
-        terms_df: DataFrame,
-        subset_df: DataFrame | None,
-        buckets: list[int],
-    ) -> DataFrame:
-        """Semi-join-pruned segment scan → ``mapInPandas`` posting
-        decode → tombstone anti-join (→ subset semi-join): search_join's
-        decode leg. ``buckets`` (the query terms' hash buckets,
-        ≤ ``term_buckets`` ints collected as one aggregate row by
-        search_join) lands as a literal partition filter on the scan —
-        the same ``bucket IN (...)`` pruning search() does, chosen over
-        dynamic partition pruning because Spark's DPP rule declines
-        when the filtering side has no selective predicate (a query
-        batch is a scan, not a filter), and a literal IN prunes at
-        planning time unconditionally."""
-        from pylate_spark import storage
-        from pylate_spark.plans.segments import decode_postings_gen
-
-        seg = (
-            self._seg.where(F.col("bucket").isin(buckets))
-            .join(terms_df, "term", "left_semi")
-            .select(
-                "term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off"
-            )
-        )
-        postings = seg.mapInPandas(
-            decode_postings_gen, schema="term string, docid long, tf long, dl long"
-        )
-        tomb_dir = active_dir(self.paths, self.manifest, "tombstones")
-        if storage.exists(tomb_dir):
-            tomb = self.spark.read.parquet(tomb_dir).select("docid").distinct()
-            postings = postings.join(tomb, "docid", "left_anti")
-        if subset_df is not None:
-            postings = postings.join(subset_df, "docid", "left_semi")
-        return postings
-
     def search_join(
         self,
         queries: DataFrame,
@@ -393,123 +352,33 @@ class InvertedIndex:
         round_to: int | None = None,
         subset: list[int] | np.ndarray | None = None,
     ) -> DataFrame:
-        """Fully distributed query path — scatter by TERM instead of by
-        shard, with NOTHING on the driver: tokenization is a
-        distributed UDF over the queries DataFrame, idf arrives via a
-        join with the persisted term_stats, postings are decoded by a
-        ``mapInPandas`` stage and scored/merged by native joins + aggs.
-        Rank-identical to ``search(mode="exhaustive")``.
+        """:meth:`search` with ``mode="exhaustive"`` over a queries
+        DataFrame ``(query_id, text)``: the batch is collected to the
+        driver and scored by the per-shard kernel, so the result is
+        rank-identical to ``search(rows, mode="exhaustive")`` by
+        construction. ``subset`` restricts candidates (corpus stats
+        stay global), as in :meth:`search`.
 
-        When to use it: the ``postings ⋈ queries ON term`` join
-        shuffles Σ_t df(t)·nq(t) rows (a term's posting list once per
-        query containing it), where :meth:`search` shuffles nothing
-        corpus-sized. On one box, use :meth:`search` — it wins at every
-        measured batch size, and at 10⁴ queries on a 3.2M-doc index
-        this path exhausts the box's shuffle capacity (PLANS.md §11).
-        This path is for a multi-executor cluster, where the exchanges
-        spread over many nodes and the kernel path's one real ceiling
-        — the driver collecting and tokenizing the batch — binds first.
+        Why not a distributed plan: this method used to scatter by
+        TERM — a ``postings ⋈ queries ⋈ term_stats`` shuffle join that
+        moves Σ_t df(t)·nq(t) rows (a term's posting list once per
+        query containing it), rows the kernel never materializes. It
+        lost at every measured batch size: 3.1× slower at 100 queries,
+        13.5× at 10³ and 23× at 10⁴ on a 30k-page index (PLANS.md
+        §15); 36× at 2·10³ on a 3.2M-doc index, where it never
+        finished 10⁴ (PLANS.md §11). Routing it through the kernel
+        cut the serve benchmark's cycle CPU by 45% in an interleaved
+        A/B (PLANS.md §15). The kernel path's driver side
+        stays small at 10⁴ queries (≤ 0.8 s planning, < 200 MB RSS):
+        large batches ship to executors in one broadcast
+        (``QUERYSET_BROADCAST_THRESHOLD``).
 
-        ``subset`` restricts *candidates* to the given docids (corpus
-        stats stay global — the reference's allow-list semantics,
-        ``fast_plaid.py:318-340``) — the kernel path's ``subset=`` made
-        distributed (a semi-join on docid instead of a sorted-array
-        mask).
-
-        Determinism contract (same as :func:`assign_docids`): the
-        ``queries`` input is evaluated once up front and pinned with a
-        lazy ``localCheckpoint``, so the bucket allow-list and the
-        scoring join see the SAME tokenized batch even if the input is
-        nondeterministic (unseeded sample, mutating view) — re-read
-        skew cannot silently drop postings. Caveat on non-local
-        masters: localCheckpoint blocks are NON-recomputable — losing
-        an executor mid-query (dynamic allocation, spot nodes) fails
-        the job with a missing-checkpoint-block error instead of
-        recomputing; on such clusters prefer a reliable checkpoint dir
-        or persist+materialize for the pin.
-
-        Input contract: ``query_id`` rows must be unique. Duplicate
-        rows for one query_id produce duplicate (query_id, term) pairs
-        and double-counted contributions here (``array_distinct``
-        dedups within a row only — the global ``.distinct()`` was a
-        full-batch shuffle, removed in round 6), while :meth:`search`'s
-        driver-side qmap silently keeps one row per id. Dedup upstream
+        Input contract: ``query_id`` should be unique. Rows that repeat
+        a query_id keep one row per id (the last one collected), as in
+        :meth:`search`; they are never scored twice. Dedup upstream
         (``dropDuplicates(["query_id"])``) if the source can repeat ids.
-
-        Plan shape: one pre-job collects the query terms' hash buckets
-        (≤ ``term_buckets`` ints, one aggregate row) that literal-prune
-        the segment scan's partition filter — the same ``bucket IN
-        (...)`` pruning search() does; query terms then semi-join-prune
-        the surviving files and the term_stats read (both ≤ |distinct
-        query terms| rows after pruning — AQE broadcasts them when
-        small, shuffles on ``term`` when not); decoded postings
-        anti-join tombstones; (query_id, docid) partial-agg shuffles;
-        WindowGroupLimit-bounded top-k merge (same final merge as
-        search()).
         """
-        # (query_id, term) pairs, unique per query by construction:
-        # array_distinct dedups INSIDE the tokenize projection (BM25
-        # sums each query term once), so qt needs no global distinct —
-        # the old ``.distinct()`` was a full shuffle of the batch.
-        # lazy localCheckpoint: materialized by the bucket pre-job
-        # below, then the scoring plan's references reuse the pinned
-        # rows instead of re-running the tokenize UDF (the determinism
-        # contract above requires a single read)
-        qt = (
-            queries.select(
-                F.col("query_id").cast("long").alias("query_id"),
-                F.explode(
-                    F.array_distinct(self._tokenize_udf(F.col("text")))
-                ).alias("term"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # duplicate terms across queries are fine: semi-joins and
-        # collect_set dedup by construction
-        terms = qt.select("term")
-        # ONE aggregate row to the driver (never query data): the query
-        # terms' hash-bucket set. Buckets of terms absent from the
-        # corpus only widen the IN list (their partitions hold no
-        # matching postings).
-        buckets = sorted(
-            terms.select(
-                (F.crc32(F.col("term")) % F.lit(self.config.term_buckets))
-                .cast("int")
-                .alias("bucket")
-            )
-            .agg(F.collect_set("bucket").alias("buckets"))
-            .collect()[0]["buckets"]
-            or []
-        )
-        stats = (
-            self.spark.read.parquet(active_dir(self.paths, self.manifest, "term_stats"))
-            .join(terms, "term", "left_semi")
-            .select("term", "df")
-        )
-        subset_df = None
-        if subset is not None:
-            subset_df = self.spark.createDataFrame(
-                [(int(d),) for d in subset], "docid long"
-            ).distinct()
-        scored = (
-            self._decoded_postings(terms, subset_df, buckets)
-            .join(qt, "term")
-            .join(stats, "term")
-            .withColumn(
-                "contrib",
-                bm25_score_col(
-                    F.col("tf"), F.col("dl"), F.col("df"),
-                    float(self.n_docs), self.avgdl, self.config.bm25,
-                ),
-            )
-            .groupBy("query_id", "docid")
-            .agg(F.sum("contrib").alias("score_d"))
-        )
-        if round_to is not None:
-            scored = scored.withColumn("score", F.round(F.col("score_d"), round_to))
-        else:
-            scored = scored.withColumn("score", F.col("score_d").cast("float"))
-        return _rank_topk(scored.drop("score_d"), k)
+        return self.search(queries, k=k, mode="exhaustive", subset=subset, round_to=round_to)
 
 
 def bm25_scan_topk(
@@ -534,11 +403,10 @@ def bm25_scan_topk(
     ``conjunctive`` keeps only docs matching every query term (AND
     mode; BM25 default is disjunctive).
 
-    Caveat (same as :meth:`InvertedIndex.search_join`): the query-term
-    postings are pinned with a lazy ``localCheckpoint``, whose blocks
-    are NOT recomputable — on a non-local master, losing an executor
-    mid-run fails the job with a missing-checkpoint-block error
-    instead of recomputing.
+    Caveat: the query-term postings are pinned with a lazy
+    ``localCheckpoint``, whose blocks are NOT recomputable — on a
+    non-local master, losing an executor mid-run fails the job with a
+    missing-checkpoint-block error instead of recomputing.
     """
     from pylate_spark.functions.tokenize import native_tokens_col
 

@@ -192,48 +192,3 @@ def arrow_carry_iterator(batches, block_size: int):
             block_size,
         )
 
-
-def decode_postings_gen(batches, chunk_rows: int = 1 << 20):
-    """``mapInPandas`` generator: segment rows → long posting rows
-    ``(term, docid, tf, dl)``, full decode (no block skipping — this is
-    the scatter-by-term query path, which consumes every posting of the
-    matched terms). Output is re-chunked at ``chunk_rows`` so a batch
-    of long-posting-list rows cannot materialize an unbounded pandas
-    frame. Column-array extraction, not iterrows (same reasoning as
-    :class:`pylate_spark.plans.wand.ShardTerms`)."""
-    import pandas as pd
-
-    from pylate_spark.functions.codec import decode_postings
-
-    forget_archive_importers()
-    cols = ("term", "payload", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off")
-
-    def flush(terms, counts, ds, tfs, dls):
-        return pd.DataFrame(
-            {
-                "term": np.repeat(np.asarray(terms, dtype=object), counts),
-                "docid": np.concatenate(ds),
-                "tf": np.concatenate(tfs),
-                "dl": np.concatenate(dls),
-            }
-        )
-
-    for pdf in batches:
-        arrs = {c: pdf[c].to_numpy(object) for c in cols}
-        terms, counts, ds, tfs, dls, size = [], [], [], [], [], 0
-        for i in range(len(pdf)):
-            row = {c: arrs[c][i] for c in cols}
-            d, tf, dl = decode_postings(row["payload"], blocks_from_row(row))
-            if d.size == 0:
-                continue
-            terms.append(row["term"])
-            counts.append(d.size)
-            ds.append(d)
-            tfs.append(tf)
-            dls.append(dl)
-            size += d.size
-            if size >= chunk_rows:
-                yield flush(terms, counts, ds, tfs, dls)
-                terms, counts, ds, tfs, dls, size = [], [], [], [], [], 0
-        if size:
-            yield flush(terms, counts, ds, tfs, dls)

@@ -63,11 +63,12 @@ def get_spark(
     # shuffle I/O across all executor threads; on a real cluster each
     # executor has its own local disks, so this only corrects a
     # single-box artifact (not applied when a cluster manager is used).
-    # CAVEAT (measured, PLANS.md §9c): tmpfs spill is RAM — a job whose
-    # shuffle spill approaches machine memory (e.g. a 10^4-query
-    # search_join batch, ~60 GB of blocks) gets the JVM OS-OOM-killed
-    # instead of degrading to disk. Point PYLATE_SPARK_LOCAL_DIR at a
-    # real disk for spill-heavy jobs; "" keeps Spark's default.
+    # CAVEAT (measured, PLANS.md §11): tmpfs spill is RAM — a job whose
+    # shuffle spill approaches machine memory gets the JVM
+    # OS-OOM-killed instead of degrading to disk (history: the retired
+    # term-scatter search_join plan did so at 10^4 queries, ~60 GB of
+    # blocks). Point PYLATE_SPARK_LOCAL_DIR at a real disk for
+    # spill-heavy jobs; "" keeps Spark's default.
     local_dir = os.environ.get("PYLATE_SPARK_LOCAL_DIR")
     if local_dir is None and master.startswith("local") and os.access("/dev/shm", os.W_OK):
         local_dir = "/dev/shm/pylate-spark-tmp"

@@ -1,13 +1,16 @@
-"""Adversarial property test for the distributed ``search_join`` plan:
-on SAMPLED query batches and k against a corpus built to maximize
-boundary events (a true stopword in every doc, mid terms, singleton
-rares, absent terms), ``search_join`` must be rank-identical to the
-exhaustive kernel — the same sampling attack that paid off on the
-kernel (``test_kernel_property.py``) and the dedup pipelines
-(``test_dedup_property.py``), now aimed at the term-scatter join in
-``plans/query.py``:
+"""Adversarial property test for ``search_join`` on SAMPLED query
+batches and k, against a corpus built to maximize boundary events (a
+true stopword in every doc, mid terms, singleton rares, absent terms).
 
-- stopword-only queries scatter a posting list that covers every doc;
+``search_join`` collects the batch and runs the exhaustive shard kernel,
+so its equality with ``search(mode="exhaustive", round_to=4)`` holds by
+construction and pins only the DataFrame entry point. The independent
+check is rank identity with the pure-python ``OracleIndex`` (scores
+within rtol 1e-5), the same sampling attack that paid off on the kernel
+(``test_kernel_property.py``) and the dedup pipelines
+(``test_dedup_property.py``):
+
+- stopword-only queries score a posting list that covers every doc;
 - rare-only queries can have fewer than k matches;
 - absent terms must contribute nothing and drop no other term's docs;
 - duplicate terms in the query text must not double-count.
@@ -22,6 +25,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from pylate_spark.config import BM25Params, IndexConfig
+from pylate_spark.oracle import OracleIndex
 from pylate_spark.plans.build import build_index
 from pylate_spark.plans.query import InvertedIndex
 
@@ -62,6 +66,12 @@ def tiny_index(spark, tmp_path_factory):
     return InvertedIndex(spark, d)
 
 
+@pytest.fixture(scope="module")
+def tiny_oracle():
+    # urls sort in row order, so docid == row index
+    return OracleIndex(list(enumerate(_corpus_pdf()["text"])))
+
+
 def _ranked(df):
     return [
         (r["query_id"], r["rank"], r["docid"], r["score"])
@@ -99,9 +109,16 @@ def batch_case(draw):
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(case=batch_case())
-def test_search_join_rank_identical_to_exhaustive(spark, tiny_index, case):
+def test_search_join_rank_identical_to_exhaustive(spark, tiny_index, tiny_oracle, case):
     queries, k = case
     want = _ranked(tiny_index.search(queries, k=k, mode="exhaustive", round_to=4))
     qdf = spark.createDataFrame(pd.DataFrame(queries, columns=["query_id", "text"]))
     got = _ranked(tiny_index.search_join(qdf, k=k, round_to=4))
     assert got == want, (queries, k)
+
+    got = _ranked(tiny_index.search_join(qdf, k=k))
+    want = tiny_oracle.search_all(queries, k=k)
+    assert [r[:3] for r in got] == [r[:3] for r in want], (queries, k)
+    np.testing.assert_allclose(
+        [r[3] for r in got], [r[3] for r in want], rtol=1e-5, err_msg=str((queries, k))
+    )

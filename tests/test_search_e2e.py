@@ -317,6 +317,60 @@ def test_search_join_subset_parity(spark, built_index, pages_t2_pdf, queries_pdf
     assert got == want
 
 
+#: search_join's result columns, without and with ``round_to``
+RANKED_DTYPES = {
+    None: [("query_id", "bigint"), ("rank", "int"), ("docid", "bigint"), ("score", "float")],
+    4: [("query_id", "bigint"), ("rank", "int"), ("docid", "bigint"), ("score", "double")],
+}
+
+
+@pytest.mark.parametrize("round_to", [None, 4])
+@pytest.mark.parametrize("case", ["empty_batch", "all_terms_absent", "empty_subset"])
+def test_search_join_degenerate_inputs_return_no_rows(
+    spark, built_index, queries_pdf, case, round_to
+):
+    """An empty queries DataFrame, a batch whose every term is absent
+    from the index, and ``subset=[]`` each return 0 rows with the
+    ranked-result schema of a non-empty call."""
+    d, _ = built_index
+    idx = InvertedIndex(spark, d)
+    subset = None
+    if case == "empty_batch":
+        qdf = spark.createDataFrame([], "query_id long, text string")
+    elif case == "all_terms_absent":
+        qdf = spark.createDataFrame(
+            [(0, "zzzznotaword"), (1, "qqqqnotaword zzzznotaword"), (2, "")],
+            "query_id long, text string",
+        )
+    else:
+        qdf = spark.createDataFrame(queries_pdf.iloc[:4])
+        subset = []
+    res = idx.search_join(qdf, k=K, round_to=round_to, subset=subset)
+    assert res.dtypes == RANKED_DTYPES[round_to]
+    assert res.collect() == []
+    live = idx.search_join(spark.createDataFrame(queries_pdf.iloc[:2]), k=K, round_to=round_to)
+    assert live.dtypes == RANKED_DTYPES[round_to]
+
+
+def test_search_join_duplicate_query_ids_keep_one_row_per_id(spark, built_index, queries_pdf):
+    """Input contract: rows repeating a query_id are never scored twice.
+    One row per id is kept (the last one collected), as in search(); an
+    exact duplicate row therefore changes nothing."""
+    d, _ = built_index
+    idx = InvertedIndex(spark, d)
+    qs = list(zip(queries_pdf["query_id"].tolist()[:3], queries_pdf["text"].tolist()[:3]))
+    (q0, t0), (q1, t1), (q2, t2) = qs
+    dup = spark.createDataFrame(
+        [(q0, t0), (q1, t1), (q0, t0), (q2, t2), (q2, t1)], "query_id long, text string"
+    )
+    got = _collect_ranked(idx.search_join(dup, k=K, round_to=4))
+    want = _collect_ranked(
+        idx.search([(q0, t0), (q1, t1), (q2, t1)], k=K, mode="exhaustive", round_to=4)
+    )
+    assert got == want
+    assert len(got) == len({(q, r) for q, r, _, _ in got})  # one ranking per id
+
+
 def test_staging_plan_single_exchange_single_udf(spark, pages_t2):
     """The docid-assignment wide pass must keep exactly ONE shuffle
     exchange (width = bucket count, reused by the window — no second

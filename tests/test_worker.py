@@ -65,7 +65,7 @@ def _segment_pdf() -> pd.DataFrame:
 
 
 @pytest.mark.parametrize(
-    "entry", ["tokenize", "score_shard", "decode_postings_gen", "arrow_carry_iterator"]
+    "entry", ["tokenize", "score_shard", "arrow_carry_iterator"]
 )
 def test_executor_entry_point_leaves_no_archive_importer(spark, entry):
     """Run the entry point inside a Python worker and report that
@@ -82,7 +82,7 @@ def test_executor_entry_point_leaves_no_archive_importer(spark, entry):
 
         from pylate_spark.config import BM25Params
         from pylate_spark.functions.tokenize import TOKEN_PATTERN, _tokenize_series
-        from pylate_spark.plans.segments import arrow_carry_iterator, decode_postings_gen
+        from pylate_spark.plans.segments import arrow_carry_iterator
         from pylate_spark.plans.wand import score_shard
 
         for _ in batches:
@@ -92,8 +92,6 @@ def test_executor_entry_point_leaves_no_archive_importer(spark, entry):
         elif entry == "score_shard":
             score_shard(seg, {0: ["alpha", "beta"]}, {"alpha": 1.0, "beta": 1.0}, 4.0, 3,
                         BM25Params(), mode="exhaustive", shard_size=8)
-        elif entry == "decode_postings_gen":
-            list(decode_postings_gen(iter([seg])))
         else:
             rows = pa.RecordBatch.from_pydict(
                 {"shard": [0, 0], "bucket": [0, 0], "term": ["alpha", "alpha"],
