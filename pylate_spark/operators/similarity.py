@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pylate_spark.functions.predicates import in_list
+
 
 def _dot(a, b):
     # NOTE (r7, measured): an unrolled fixed-dim ``a[0]*b[0] + …`` chain
@@ -353,7 +355,7 @@ def ivf_topk_bucketed(
     )
     qb = [int(r["bucket"]) for r in q.select("bucket").distinct().collect()]
     probe_buckets = sorted({b ^ m for b in qb for m in masks})
-    e = spark.read.parquet(path).where(F.col("bucket").isin(probe_buckets))
+    e = spark.read.parquet(path).where(in_list("bucket", probe_buckets))
     if n_probe > 1:
         q = q.withColumn(
             "bucket",

@@ -30,15 +30,16 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pylate_spark.config import BM25Params, IndexConfig
+from pylate_spark.config import BM25Params
 from pylate_spark.functions.bm25 import bm25_score_col, idf_np
+from pylate_spark.functions.predicates import in_list
 from pylate_spark.functions.tokenize import (
     TOKEN_PATTERN,
     make_tokenize_udf,
     terms_long,
     tokenize_py,
 )
-from pylate_spark.plans.build import IndexPaths, active_dir, load_manifest
+from pylate_spark.plans.build import IndexPaths, _geometry, active_dir, load_manifest
 from pylate_spark.plans.wand import score_shard
 from pylate_spark.worker import forget_archive_importers
 
@@ -111,7 +112,7 @@ class InvertedIndex:
         self.manifest = load_manifest(self.paths)
         if not self.manifest.get("finalized"):
             raise ValueError(f"index at {index_dir} is not finalized")
-        self.config = IndexConfig.from_dict(self.manifest["config"])
+        self.config, spb = _geometry(self.manifest)
         self.n_docs = int(self.manifest["n_docs"])
         self.avgdl = float(self.manifest["avgdl"])
         # driver-side caches for repeated searches on one handle; a
@@ -120,6 +121,21 @@ class InvertedIndex:
         # state dirs resolve through the manifest (versioned rewrites
         # flip these pointers atomically; see plans/build.active_dir)
         self._seg = self.spark.read.parquet(active_dir(self.paths, self.manifest, "segments"))
+        # search()'s scan projection, analyzed once per handle. The
+        # kernel stage routes rows by `ordinal`, a dense shard number:
+        # a build's shards 0..spb-1 and an add's batch-aligned shards
+        # 0, spb, 2·spb, … both map to consecutive values, so the
+        # id-passthrough exchange spreads them round-robin over the
+        # kernel tasks (hash or `shard % n` routing piles them onto one
+        # task). Grouping still keys on `shard`; the ordinal only places.
+        self._seg_scan = self._seg.select(
+            "shard", "term", "df", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off", "payload",
+            F.expr(f"CAST(shard DIV {spb} + shard % {spb} AS INT)").alias("ordinal"),
+        )
+        ssz = self.config.shard_size
+        n_shards = sum(-(-int(b["n_docs"]) // ssz) for b in self.manifest["batches"].values())
+        #: kernel-stage width: one task per core, never more than shards
+        self._kernel_tasks = max(1, min(self.spark.sparkContext.defaultParallelism, n_shards))
         self._df_cache: dict[str, int | None] = {}
         # tombstones are loaded ONCE per handle and broadcast: they are
         # re-used by every search/doc_vectors call, and a broadcast ships
@@ -204,7 +220,7 @@ class InvertedIndex:
                         }
                     )
 
-        seg = self._seg.where(F.col("shard").isin(shards))
+        seg = self._seg.where(in_list("shard", shards))
         return seg.mapInPandas(gen, schema="docid long, term string, tf int, dl int")
 
     # -- tombstones (delete support, index_updater.py:52-69) --------
@@ -255,7 +271,7 @@ class InvertedIndex:
         if missing:
             stats = (
                 self.spark.read.parquet(active_dir(self.paths, self.manifest, "term_stats"))
-                .where(F.col("term").isin(missing))
+                .where(in_list("term", missing))
                 .select("term", "df")
                 .collect()
             )
@@ -311,11 +327,7 @@ class InvertedIndex:
             qset_bc = self._qset_bc = self.spark.sparkContext.broadcast((qmap, idf))
             qmap, idf = None, None  # keep the payload out of the closure
 
-        seg = (
-            self._seg
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(vocab_terms))
-            .select("shard", "term", "df", "b_first", "b_last", "b_n", "b_max_tf", "b_min_dl", "b_off", "payload")
-        )
+        seg = self._seg_scan.where(in_list("bucket", buckets) & in_list("term", vocab_terms))
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             qm, qidf = qset_bc.value if qset_bc is not None else (qmap, idf)
@@ -331,7 +343,11 @@ class InvertedIndex:
         # large query batch keeps it small) — no serialization happens
         # in the query hot path itself
         self._last_kernel = kernel
-        scored = seg.groupBy("shard").applyInPandas(kernel, schema=_result_schema(round_to))
+        scored = (
+            seg.repartitionById(self._kernel_tasks, "ordinal")
+            .groupBy("ordinal", "shard")
+            .applyInPandas(kernel, schema=_result_schema(round_to))
+        )
         return _rank_topk(scored, k)
 
     @property

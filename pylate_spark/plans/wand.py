@@ -180,7 +180,6 @@ class ShardTerms:
         lo = np.searchsorted(cand, b.first, side="left")
         hi = np.searchsorted(cand, b.last, side="right")
         need = np.flatnonzero(hi > lo)
-        self.blocks_skipped = getattr(self, "blocks_skipped", 0) + (b.first.size - need.size)
         docids, tfs, dls = decode_postings(self.rows[term]["payload"], self.blocks[term], select=need)
         docids, tfs, dls = self._mask(docids, tfs, dls)
         keep = _in_sorted(docids, cand)

@@ -86,6 +86,15 @@ def get_spark(
         java_opts = "-XX:+UseParallelGC"
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    # sort page size (local mode only, measured, PLANS.md §16): Spark
+    # sizes a page as heap / cores / 16 (32 MB at local[2] with a 2 g
+    # heap) and every sorter takes a whole page, even for a few hundred
+    # rows. search()'s kernel stage runs two sorters per task on every
+    # core; at the default the young generation tripled and the JVM's
+    # PSS grew by ~450 MB (serve index, 4-vCPU VM). At 4 MB it stays
+    # near the one-task level; a large sort only takes more pages.
+    if master.startswith("local["):
+        builder = builder.config("spark.buffer.pageSize", "4m")
     exec_opts = os.environ.get("PYLATE_SPARK_EXECUTOR_JAVA_OPTS")
     if exec_opts:
         builder = builder.config("spark.executor.extraJavaOptions", exec_opts)

@@ -111,6 +111,146 @@ def test_final_merge_has_partial_window_group_limit(spark, built_index, queries_
     assert "MapInPandas" not in plan, plan  # no redundant python hop
 
 
+def test_kernel_stage_single_id_passthrough_exchange(spark, built_index, queries_pdf):
+    """Segment rows reach the shard kernel through exactly ONE exchange,
+    the id-passthrough one of ``repartitionById`` (AQE never coalesces
+    it, so the kernel stage keeps one task per core). A hash exchange
+    on ``shard`` under the kernel would be the old plan, whose single
+    coalesced partition scored every shard in one task."""
+    import contextlib
+    import io
+    import re
+
+    d, _ = built_index
+    idx = InvertedIndex(spark, d)
+    qs = list(zip(queries_pdf["query_id"].tolist()[:8], queries_pdf["text"].tolist()[:8]))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        idx.search(qs, k=K).explain("formatted")
+    plan = buf.getvalue()
+    tree = plan.split("\n\n")[0]
+    below_kernel = tree.split("FlatMapGroupsInPandas", 1)[1]
+    exchanges = re.findall(r"Exchange \((\d+)\)", below_kernel)
+    assert len(exchanges) == 1, tree
+    node = re.search(rf"\({exchanges[0]}\) Exchange\n(.*?)\n\n", plan, re.S).group(1)
+    assert "shufflepartitionidpassthrough" in node, node
+    assert "hashpartitioning(shard" not in plan, plan
+
+
+def test_search_planning_py4j_calls_independent_of_term_count(spark, built_index, monkeypatch):
+    """Planning a batch costs the same driver→JVM round trips for 5
+    query terms as for 500: the term_stats lookup and the segment scan
+    filter are each one parsed IN-list, not one ``lit`` per term."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from pylate_spark.plans.build import active_dir
+
+    d, _ = built_index
+    probe = InvertedIndex(spark, d)
+    ts = spark.read.parquet(active_dir(probe.paths, probe.manifest, "term_stats"))
+    terms = sorted(r["term"] for r in ts.select("term").collect())[:500]
+    assert len(terms) == 500
+
+    client = spark.sparkContext._gateway._gateway_client
+    real, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        # proxy releases are py4j bookkeeping sent whenever Python
+        # frees a JavaObject, not planning round trips
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return real(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+
+    def planning_calls(n_terms):
+        idx = InvertedIndex(spark, d)  # fresh handle: every term misses the df cache
+        words = terms[:n_terms]
+        qs = [(i, " ".join(words[j : j + 10])) for i, j in enumerate(range(0, n_terms, 10))]
+        before = len(calls)
+        idx.search(qs, k=K)
+        n = len(calls) - before
+        assert len(idx._df_cache) == n_terms
+        return n
+
+    planning_calls(5)  # first-use lookups (classes, confs) are paid once per session
+    assert planning_calls(5) == planning_calls(500)
+
+
+_KERNEL_STAGE_PROBE = r"""
+import json, sys
+
+from pylate_spark.config import IndexConfig
+from pylate_spark.plans.build import build_index
+from pylate_spark.plans.maintenance import add_documents
+from pylate_spark.plans.query import InvertedIndex
+from pylate_spark.session import get_spark
+from pylate_spark.sources.synth import synth_pages_pandas, synth_queries_pandas
+
+root = sys.argv[1]
+spark = get_spark(app_name="kernel_stage_probe", master="local[2]", shuffle_partitions=4)
+sc = spark.sparkContext
+cfg = IndexConfig(shard_size=128, block_size=64, term_buckets=8)
+pages = synth_pages_pandas(600)
+# one build batch of shards 0-3 (the serve layout)
+build_index(spark, spark.createDataFrame(pages.iloc[:512]), f"{root}/build", config=cfg, shards_per_batch=4)
+# a one-shard base and two adds, each opening a batch: shards 0, 4, 8
+build_index(spark, spark.createDataFrame(pages.iloc[:100]), f"{root}/adds", config=cfg, shards_per_batch=4)
+for lo in (100, 300):
+    add_documents(spark, spark.createDataFrame(pages.iloc[lo : lo + 100]), f"{root}/adds")
+q = synth_queries_pandas(20)
+qs = list(zip(q["query_id"].tolist(), q["text"].tolist()))
+store = sc._jsc.sc().statusStore()
+out = {}
+for name in ("build", "adds"):
+    idx = InvertedIndex(spark, f"{root}/{name}")
+    sc.setJobGroup(name, name)
+    idx.search(qs, k=5).collect()
+    kernel_stages = []  # the one stage that both reads and writes a shuffle
+    for jid in sc.statusTracker().getJobIdsForGroup(name):
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            sd = store.lastStageAttempt(sid)
+            if sd.shuffleReadRecords() and sd.shuffleWriteRecords():
+                tasks = store.taskList(sid, sd.attemptId(), 1000)
+                kernel_stages.append(sorted(
+                    int(tasks.apply(i).taskMetrics().get().shuffleReadMetrics().recordsRead())
+                    for i in range(tasks.size())
+                ))
+    shards = sorted(r["shard"] for r in idx._seg.select("shard").distinct().collect())
+    out[name] = {"shards": shards, "kernel_stages": kernel_stages}
+print("RESULT " + json.dumps(out))
+"""
+
+
+def test_kernel_stage_runs_on_every_core(tmp_path):
+    """Under ``local[2]`` the kernel stage runs 2 tasks that both score
+    shards, for the build layout (shards 0-3 in one batch) and for the
+    add layout (one shard per batch: 0, spb, 2·spb), where hash routing
+    or ``shard % 2`` would leave one task idle. Read from the driver's
+    status store in a separate ``local[2]`` process."""
+    import json
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = str(pathlib.Path(__file__).resolve().parents[1])
+    env = {**os.environ, "PYLATE_SPARK_DRIVER_MEM": "1g"}
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (repo, env.get("PYTHONPATH")) if p)
+    proc = subprocess.run(
+        [sys.executable, "-c", _KERNEL_STAGE_PROBE, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=900,
+    )
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and line, proc.stderr[-4000:]
+    out = json.loads(line[-1][len("RESULT "):])
+    assert out["build"]["shards"] == [0, 1, 2, 3]
+    assert out["adds"]["shards"] == [0, 4, 8]
+    for layout in out.values():
+        (per_task,) = layout["kernel_stages"]  # one kernel stage
+        assert len(per_task) == 2 and min(per_task) > 0, layout
+
+
 def test_subset_filter_large_broadcast(spark, built_index, pages_t2_pdf, queries_pdf):
     """A large allow-list (> SUBSET_BROADCAST_THRESHOLD) takes the
     broadcast path instead of riding every task closure; results must be
