@@ -17,11 +17,15 @@ Mirrors the reference's four-phase resumable build
   skips batches whose manifest entry is committed, exactly as the
   reference skips already-saved chunks
   (``collection_indexer.py:408-449``, ``index_saver.py:21-50``).
-- **finalize** (:func:`_finalize`): global term statistics (the SPIMI
-  merge — per-(shard, term) runs aggregated per term; the recorded
-  ``merge_fan_in`` is runs/term), docmap, manifest with corpus stats,
-  config, lineage and per-batch metrics — the analog of
-  ``metadata.json`` (``collection_indexer.py:578-591``).
+- **finalize** (:func:`_finalize`): global term statistics by *fold*
+  — the active ``term_stats`` plus the per-(shard, term) runs of the
+  batches not yet folded, summed per term (the SPIMI merge; the
+  recorded ``merge_fan_in`` is runs/term) — so an add's stats work
+  scales with its new batches only. Then the docmap, and the manifest
+  with corpus stats, config, lineage and per-batch metrics — the
+  analog of ``metadata.json`` (``collection_indexer.py:578-591``).
+  Batch and fan-in metrics are observed on the writes that produce
+  them, never read back.
 
 Skew note (north_rule): the *salt* is the doc-range shard. A stopword's
 postings are split across all shards, so no task ever materializes more
@@ -37,11 +41,14 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pylate_spark import storage
 from pylate_spark.config import IndexConfig
+from pylate_spark.functions.predicates import in_list
 from pylate_spark.functions.tokenize import native_tokens_col, terms_long
 from pylate_spark.operators.docids import assign_docids
 from pylate_spark.plans.segments import SEGMENT_SCHEMA, arrow_carry_iterator
@@ -210,7 +217,7 @@ def _stage_corpus(
     text_col: str,
     docid_base: int = 0,
     staging_dir: str | None = None,
-) -> int | None:
+) -> dict[int, dict]:
     """Write the staged corpus ``(batch, shard, docid, url, dl, text)``
     partitioned by batch. ``dl`` is computed with the *native*
     ``regexp_extract_all`` so corpus stats never re-tokenize (the UDF
@@ -226,8 +233,11 @@ def _stage_corpus(
     dense (max docid == row count - 1) before the caller commits the
     staging manifest entry — the cheap guard for the "input must be
     deterministically re-readable" contract of the two-pass docid
-    assignment. Returns the highest batch id among the rows just staged
-    (None for an empty input), read off the same guard scan."""
+    assignment. The guard groups by batch, so the same scan returns
+    each new batch's exact doc stats (``{batch: {n_docs,
+    n_docs_tokenized, sum_dl}}``, empty for an empty input) — BM25's N
+    and avgdl come from them, so they are an aggregate, never an
+    accumulator that a retried task could double-count."""
     # project to the two columns the build needs before any exchange —
     # html and other payload columns would otherwise ride through the
     # exchange and the staging write (Catalyst prunes scans, but the
@@ -255,8 +265,9 @@ def _stage_corpus(
     # density guard (columns-pruned scan of what was just written): a
     # non-deterministic input DataFrame would desynchronize the counts
     # pass from the rank pass and corrupt docids silently
-    # the docid >= base predicate hits parquet row-group stats, so an
-    # incremental add (append into existing staging) skips old batches.
+    # the batch predicate prunes partitions and docid >= base hits
+    # parquet row-group stats, so an incremental add (append into
+    # existing staging) skips old batches.
     # Moments, not just count+min+max: a counts-vs-rank desync that
     # PRESERVES the total row count (one bucket short, another long)
     # creates a duplicate docid plus a hole that min/max/count cannot
@@ -265,29 +276,35 @@ def _stage_corpus(
     # Decimal(38) aggregation: int64 sums overflow at ~10^9 docs
     # (n·docid ~ 10^24 at the design point) and Spark wraps silently.
     d38 = F.col("docid").cast("decimal(38,0)")
-    g = spark.read.parquet(out).where(F.col("docid") >= docid_base).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("docid").alias("mx"), F.min("docid").alias("mn"),
-        F.sum(d38).alias("s1"), F.sum(d38 * d38).alias("s2"),
-        F.max("batch").alias("top"),
-    ).collect()[0]
-    n = int(g["n"] or 0)
+    rows = (
+        spark.read.parquet(out)
+        .where((F.col("batch") >= docid_base // (config.shard_size * shards_per_batch))
+               & (F.col("docid") >= docid_base))
+        .groupBy("batch")
+        .agg(
+            *_doc_stats(),
+            F.max("docid").alias("mx"), F.min("docid").alias("mn"),
+            F.sum(d38).alias("s1"), F.sum(d38 * d38).alias("s2"),
+        )
+        .collect()
+    )
+    n = sum(int(r["n_docs"]) for r in rows)
     if n:
+        mn, mx = min(int(r["mn"]) for r in rows), max(int(r["mx"]) for r in rows)
+        s1, s2 = sum(int(r["s1"]) for r in rows), sum(int(r["s2"]) for r in rows)
         b, hi = docid_base, docid_base + n - 1
         want_s1 = n * b + n * (n - 1) // 2
         want_s2 = sum((n * b * b, b * n * (n - 1), (n - 1) * n * (2 * n - 1) // 6))
-        ok = (
-            int(g["mn"]) == b and int(g["mx"]) == hi
-            and int(g["s1"]) == want_s1 and int(g["s2"]) == want_s2
-        )
-        if not ok:
+        if not (mn == b and mx == hi and s1 == want_s1 and s2 == want_s2):
             raise RuntimeError(
-                f"staged docids not dense: n={n}, min={g['mn']}, max={g['mx']}, "
-                f"sum={g['s1']} (want {want_s1}), sumsq={g['s2']} (want {want_s2}), "
+                f"staged docids not dense: n={n}, min={mn}, max={mx}, "
+                f"sum={s1} (want {want_s1}), sumsq={s2} (want {want_s2}), "
                 f"base={docid_base} — is the input DataFrame deterministic across reads?"
             )
-        return int(g["top"])
-    return None
+    return {
+        int(r["batch"]): {f: int(r[f] or 0) for f in ("n_docs", "n_docs_tokenized", "sum_dl")}
+        for r in rows
+    }
 
 
 def _doc_stats() -> list:
@@ -348,20 +365,28 @@ def _build_one_batch(
     # (tasks × buckets tiny files — a small-files explosion that slows
     # both the write and every later bucket-pruned query scan). The
     # extra shuffle moves only the compressed index, not the corpus.
-    encoded = encoded.repartition("bucket").sortWithinPartitions("term", "shard")
-    encoded.write.mode("append").partitionBy("batch", "bucket").parquet(seg_dir)
-
-    # metrics from the written data (cheap column scan, no payload read)
-    m = (
-        spark.read.parquet(batch_dir)
-        .agg(
+    # The batch metrics are observed in the write's result stage, after
+    # its last exchange, instead of re-reading what was written.
+    obs = Observation(f"segments_batch_{batch}")
+    (
+        encoded.repartition("bucket")
+        .sortWithinPartitions("term", "shard")
+        .observe(
+            obs,
             F.sum("df").alias("n_postings"),
             F.sum(F.length("payload")).alias("bytes"),
             F.count(F.lit(1)).alias("n_runs"),
         )
-        .collect()[0]
+        .write.mode("append")
+        .partitionBy("batch", "bucket")
+        .parquet(seg_dir)
     )
-    d = staged.agg(*_doc_stats()).collect()[0]
+    m = obs.get
+    # doc stats from the staging guard; a batch staged before they were
+    # recorded there computes them here
+    d = manifest["batches"].get(str(batch), {})
+    if "n_docs" not in d:
+        d = staged.agg(*_doc_stats()).collect()[0].asDict()
     dt = time.time() - t0
     n_post = int(m["n_postings"] or 0)
     nbytes = int(m["bytes"] or 0)
@@ -369,7 +394,7 @@ def _build_one_batch(
         "status": "committed",
         "batch": batch,
         "n_docs": int(d["n_docs"]),
-        "n_docs_tokenized": int(d["n_docs_tokenized"]),
+        "n_docs_tokenized": int(d["n_docs_tokenized"] or 0),
         "sum_dl": int(d["sum_dl"] or 0),
         "n_postings": n_post,
         "n_runs": int(m["n_runs"] or 0),
@@ -382,6 +407,12 @@ def _build_one_batch(
     }
 
 
+def _staged_entries(staged: dict[int, dict]) -> dict[str, dict]:
+    """Manifest entries for freshly staged batches: their doc stats,
+    status ``staged`` until the batch build commits them."""
+    return {str(b): {"status": "staged", **d} for b, d in staged.items()}
+
+
 def _geometry(manifest: dict) -> tuple[IndexConfig, int]:
     """(config, shards_per_batch) as staging committed them. Every step
     after staging reads the geometry here, never from a caller; a
@@ -389,18 +420,37 @@ def _geometry(manifest: dict) -> tuple[IndexConfig, int]:
     return IndexConfig.from_dict(manifest["config"]), int(manifest.get("shards_per_batch", 64))
 
 
+def _tombstones(paths: IndexPaths, manifest: dict) -> np.ndarray:
+    """The active tombstone set, sorted and unique, read on the driver."""
+    return np.unique(
+        storage.read_column(active_dir(paths, manifest, "tombstones"), "docid").astype(np.int64)
+    )
+
+
 def _subtract_deleted(
-    spark: SparkSession, paths: IndexPaths, manifest: dict, ts: DataFrame, docids: DataFrame
-) -> tuple[DataFrame, int, int]:
-    """Subtract the documents in ``docids`` from term stats ``ts``: the
-    per-term df/cf deltas are recomputed exactly from their staged
-    text. Returns (adjusted term stats, number of deleted tokenized
-    docs, their sum_dl)."""
-    pattern = _geometry(manifest)[0].token_pattern
-    staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
-    deleted = staged.join(F.broadcast(docids), "docid", "inner")
+    spark: SparkSession, paths: IndexPaths, manifest: dict, ts: DataFrame, ids: np.ndarray
+) -> tuple[DataFrame, np.ndarray, int, int]:
+    """Subtract the staged documents among ``ids`` from term stats
+    ``ts``. Ids of no staged document are dropped: never assigned, or
+    purged by a compact, they have nothing to delete. One pass reads
+    ``(docid, dl)`` of the matching staged rows, from only the batch
+    partitions the ids fall in; only those documents' text is then
+    tokenized for the exact per-term df/cf deltas. Returns (adjusted
+    term stats, the resolved docids, their tokenized-doc count, their
+    sum_dl)."""
+    config, spb = _geometry(manifest)
+    ids = np.asarray(ids, dtype=np.int64)
+    staged = spark.read.parquet(active_dir(paths, manifest, "staging")).where(
+        in_list("batch", np.unique(ids // (config.shard_size * spb)).tolist())
+    )
+    doomed = staged.join(
+        F.broadcast(spark.createDataFrame(pd.DataFrame({"docid": ids}))), "docid", "left_semi"
+    )
+    hit = doomed.select("docid", "dl").toPandas()
+    if not len(hit):
+        return ts, np.empty(0, np.int64), 0, 0
     deltas = (
-        terms_long(deleted.select("docid", "text"), pattern=pattern)
+        terms_long(doomed.select("docid", "text"), pattern=config.token_pattern)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df_del"), F.sum("tf").alias("cf_del"))
     )
@@ -411,46 +461,73 @@ def _subtract_deleted(
         .drop("df_del", "cf_del")
         .where(F.col("df") > 0)
     )
-    d = deleted.agg(*_doc_stats()).collect()[0]
-    return ts, int(d["n_docs_tokenized"] or 0), int(d["sum_dl"] or 0)
+    dl = hit["dl"].to_numpy(np.int64)
+    return ts, hit["docid"].to_numpy(np.int64), int((dl > 0).sum()), int(dl.sum())
 
 
 def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
-    """Global term stats (SPIMI merge bookkeeping), docmap, corpus stats.
-    Tombstoned documents are subtracted exactly, so re-finalizing after
-    an incremental add preserves delete semantics. term_stats and docmap
-    are written as NEW version dirs and flipped in the same manifest
-    commit that flips ``finalized`` (an in-place overwrite would leave a
-    torn directory on a crash mid-write)."""
-    seg = spark.read.parquet(active_dir(paths, manifest, "segments"))
-    ts = (
-        seg.groupBy("term")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.max(F.array_max("b_max_tf")).alias("max_tf"),
-            F.min(F.array_min("b_min_dl")).alias("min_dl"),
-            F.count(F.lit(1)).alias("merge_fan_in"),
-        )
+    """Fold the batches not yet folded into the term stats, then write
+    the docmap and the corpus stats.
+
+    ``term_stats' = term_stats ⊕ runs(new batches)``: the active stats
+    and the new batches' (shard, term) runs in one union, summed per
+    term (df, cf, merge_fan_in); ``n_docs`` and ``sum_dl`` add the new
+    batches' staged doc stats. The active stats are already net of
+    every delete (a delete subtracts at delete time), so the fold
+    subtracts only tombstones inside a new batch's docid range. Deletes
+    resolve against staging, so there are none; an index written
+    before that rule may carry such stray ids.
+
+    ``manifest["folded"]`` lists the folded batch ids and flips in the
+    same atomic commit as the new term_stats dir, so a crash before the
+    commit re-folds from the old stats. A manifest without the record
+    (a fresh build, compact's re-finalize, an index written before the
+    record existed) folds every batch into empty stats. A term whose df
+    falls to 0 leaves the stats; if it returns, its ``merge_fan_in``
+    restarts from the runs folded since.
+
+    term_stats and docmap are written as NEW version dirs and flipped
+    in the same manifest commit that flips ``finalized`` (an in-place
+    overwrite would leave a torn directory on a crash mid-write)."""
+    t0 = time.time()
+    batches = manifest["batches"]
+    folded = set(manifest.get("folded", []))
+    new = sorted(int(k) for k in batches if int(k) not in folded)
+    config, spb = _geometry(manifest)
+    parts = (
+        spark.read.parquet(active_dir(paths, manifest, "segments"))
+        .where(in_list("batch", new))
+        .select("term", "df", "cf", F.lit(1).cast("long").alias("merge_fan_in"))
     )
+    if folded:
+        parts = (
+            spark.read.parquet(active_dir(paths, manifest, "term_stats"))
+            .select("term", "df", "cf", "merge_fan_in")
+            .unionByName(parts)
+        )
+    ts = parts.groupBy("term").agg(
+        F.sum("df").alias("df"), F.sum("cf").alias("cf"), F.sum("merge_fan_in").alias("merge_fan_in")
+    )
+    tomb = _tombstones(paths, manifest)
+    stray = tomb[np.isin(tomb // (config.shard_size * spb), new)]
     n_del = dl_del = 0
-    tomb_dir = active_dir(paths, manifest, "tombstones")
-    if storage.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).distinct()
-        ts, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, tomb)
+    if stray.size:
+        ts, _, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, stray)
+    fan = Observation("term_stats_fan_in")
     ts_dir = storage.join(paths.root, bump_dir(manifest, "term_stats"))
-    ts.write.mode("overwrite").parquet(ts_dir)
+    ts.observe(
+        fan, F.avg("merge_fan_in").alias("avg"), F.max("merge_fan_in").alias("max")
+    ).write.mode("overwrite").parquet(ts_dir)
 
     staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
     dm_dir = storage.join(paths.root, bump_dir(manifest, "docmap"))
     staged.select("url", "docid", "shard", "dl").write.mode("overwrite").parquet(dm_dir)
 
-    batches = manifest.get("batches", {})
-    n_docs = sum(b["n_docs_tokenized"] for b in batches.values()) - n_del
-    sum_dl = sum(b["sum_dl"] for b in batches.values()) - dl_del
-    fan = spark.read.parquet(ts_dir).agg(
-        F.avg("merge_fan_in").alias("avg"), F.max("merge_fan_in").alias("max")
-    ).collect()[0]
+    added = [batches[str(b)] for b in new]
+    n_docs = (manifest["n_docs"] if folded else 0) - n_del + sum(
+        b["n_docs_tokenized"] for b in added
+    )
+    sum_dl = (manifest["sum_dl"] if folded else 0) - dl_del + sum(b["sum_dl"] for b in added)
     manifest.update(
         {
             "n_docs": n_docs,
@@ -458,8 +535,10 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
             "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
             "n_postings": sum(b["n_postings"] for b in batches.values()),
             "bytes": sum(b["bytes"] for b in batches.values()),
-            "merge_fan_in_avg": float(fan["avg"] or 0.0),
-            "merge_fan_in_max": int(fan["max"] or 0),
+            "merge_fan_in_avg": float(fan.get["avg"] or 0.0),
+            "merge_fan_in_max": int(fan.get["max"] or 0),
+            "folded": sorted(int(k) for k in batches),
+            "finalize_sec": round(time.time() - t0, 3),
             "finalized": True,
             "lineage": manifest.get("lineage", []),
         }
@@ -515,20 +594,22 @@ def build_index(
         config = config or IndexConfig()
         staging_dir = active_dir(paths, manifest, "staging")
         storage.rmtree(staging_dir)  # killed mid-staging → redo atomically
-        top = _stage_corpus(
+        t0 = time.time()
+        staged = _stage_corpus(
             spark, pages, paths, config, shards_per_batch, key_col, text_col,
             staging_dir=staging_dir,
         )
         manifest = {
             "staged": True,
-            "n_batches": (top or 0) + 1,
+            "n_batches": max(staged, default=0) + 1,
             "config": config.to_dict(),
             # the batch geometry is part of the physical plan: docid →
             # batch mapping must stay stable across incremental adds
             # (every later step reads it back via _geometry)
             "shards_per_batch": int(shards_per_batch),
-            "batches": {},
-            "lineage": [{"stage": "staging", "at": _now(), "source": "caller DataFrame"}],
+            "batches": _staged_entries(staged),
+            "lineage": [{"stage": "staging", "at": _now(), "source": "caller DataFrame",
+                         "stage_sec": round(time.time() - t0, 3)}],
         }
         save_manifest(paths, manifest)
 

@@ -7,15 +7,18 @@ Reference analogs:
   trained codec). Our adds append whole new *build batches* (docids
   start at the next batch-aligned boundary so committed batches are
   never touched — the append is as atomic and resumable as the
-  original build), then re-finalize term/corpus stats exactly.
+  original build), then fold the new batches into the term/corpus
+  stats exactly: the stats work scales with the new batches, not with
+  the index.
 - ``remove_documents`` — ``fast_plaid.py:232-276`` renumbers ids;
   ``index_updater.py:52-69,329-365`` rewrites IVF cells. We use
   tombstones instead (Iceberg-style row-level deletes): a small docid
   set consulted by the query kernel, with *exact* stats adjustment
   (df/cf per term, N, avgdl recomputed from the staged texts of the
-  deleted docs), so post-delete scores remain rank-identical to a
-  from-scratch oracle. Block metadata stays a valid upper bound under
-  deletion (scores only shrink), so the pruning cascade stays exact.
+  deleted docs, in one pass over those docs only), so post-delete
+  scores remain rank-identical to a from-scratch oracle. Block
+  metadata stays a valid upper bound under deletion (scores only
+  shrink), so the pruning cascade stays exact.
 - ``compact`` physically drops tombstoned postings and rewrites
   segments — the analog of the reference's chunk rewrite
   (``index_updater.py:414-460``).
@@ -23,8 +26,8 @@ Reference analogs:
 Idempotence / replay contract (used by streaming ingest):
 - batch geometry (``shards_per_batch``) is persisted in the manifest at
   build time; adds always reuse it, so new batch ids can never collide
-  with committed ones (new ids are allocated past
-  ``max(committed batch, staged docid range)``).
+  with committed ones (new ids are allocated past the highest committed
+  batch id).
 - every add is bracketed by manifest commits: a ``pending_add`` marker
   is written *before* staging (so a crash mid-staging is detected and
   the partial batch dirs purged on the next attempt), and the
@@ -37,8 +40,11 @@ Idempotence / replay contract (used by streaming ingest):
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pylate_spark import storage
@@ -49,7 +55,9 @@ from pylate_spark.plans.build import (
     _geometry,
     _now,
     _stage_corpus,
+    _staged_entries,
     _subtract_deleted,
+    _tombstones,
     active_dir,
     build_index,
     bump_dir,
@@ -168,14 +176,20 @@ def add_documents(
 ) -> dict:
     """Append new documents as fresh build batches.
 
-    New docids start at the next batch-aligned boundary past both the
-    current staged maximum AND every batch id the manifest has ever
-    committed, so (a) existing committed batches are untouched, (b)
-    every (shard, term) run stays unique — no cross-batch posting merge
-    is ever needed at query time — and (c) batch ids never collide even
-    after a compact emptied the trailing batch. The batch geometry
-    (config, ``shards_per_batch``) is the one the build persisted in
-    the manifest; an add takes no geometry of its own.
+    New docids start at the batch-aligned boundary past every batch id
+    the manifest has ever committed, so (a) existing committed batches
+    are untouched, (b) every (shard, term) run stays unique — no
+    cross-batch posting merge is ever needed at query time — and (c)
+    batch ids never collide even after a compact emptied the trailing
+    batch. No staging scan is needed: once the index opens, every
+    staged row belongs to a committed batch (a crashed add's rows are
+    purged, an incomplete add is refused). The batch geometry (config,
+    ``shards_per_batch``) is the one the build persisted in the
+    manifest; an add takes no geometry of its own.
+
+    Only the new batches are built and folded into the term stats
+    (``build._finalize``); committed segments and deleted documents are
+    not re-read. The docmap is still rewritten from all of staging.
 
     ``epoch_key`` makes the add idempotent per key (exactly-once under
     Structured Streaming epoch replay): an already-applied key returns
@@ -194,11 +208,7 @@ def add_documents(
     batch_span = config.shard_size * spb
 
     staging_dir = active_dir(paths, manifest, "staging")
-    cur_max = int(
-        spark.read.parquet(staging_dir).agg(F.max("docid")).collect()[0][0] or -1
-    )
-    committed_max = max((int(k) for k in manifest.get("batches", {})), default=-1)
-    next_batch = max(cur_max // batch_span, committed_max) + 1
+    next_batch = max((int(k) for k in manifest.get("batches", {})), default=-1) + 1
     docid_base = next_batch * batch_span
 
     # pre-stage marker: committed BEFORE any staged row becomes visible,
@@ -211,11 +221,15 @@ def add_documents(
     }
     save_manifest(paths, manifest)
 
-    top = _stage_corpus(
+    t0 = time.time()
+    staged = _stage_corpus(
         spark, new_pages, paths, config, spb, key_col, text_col,
         docid_base=docid_base, staging_dir=staging_dir,
     )
-    manifest["n_batches"] = (cur_max // batch_span if top is None else top) + 1
+    stage_sec = round(time.time() - t0, 3)
+    if staged:
+        manifest["n_batches"] = max(staged) + 1
+        manifest["batches"].update(_staged_entries(staged))
     manifest["finalized"] = False
     manifest.pop("pending_add", None)
     if epoch_key is not None:
@@ -224,7 +238,7 @@ def add_documents(
         _record_epoch(manifest, epoch_key, epoch_monotonic)
     manifest.setdefault("lineage", []).append(
         {"stage": "add_documents", "at": _now(),
-         "docid_base": docid_base, "epoch_key": epoch_key}
+         "docid_base": docid_base, "epoch_key": epoch_key, "stage_sec": stage_sec}
     )
     save_manifest(paths, manifest)
     return _commit_batches(spark, paths, manifest)
@@ -249,6 +263,13 @@ def resume_add(spark: SparkSession, index_dir: str) -> dict:
 def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> dict:
     """Tombstone-delete docids with exact stats adjustment.
 
+    Only docids of staged documents are deleted. An id the index never
+    assigned, one already deleted, or one a compact has purged is
+    ignored: tombstoning a never-assigned id would silently delete the
+    document a later add assigns it to. The ids resolve in one pass
+    over the deleted documents (``build._subtract_deleted``); only
+    their text is re-tokenized, for the df/cf deltas.
+
     The delete is ONE atomic commit: the new tombstone set and the
     adjusted term_stats are written as fresh versioned dirs, and both
     pointer flips land in the same manifest write as the corpus-stats
@@ -258,24 +279,18 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     the double-delete guard, permanently desynchronizing stats from the
     tombstone filter)."""
     paths, manifest = _open(index_dir)
-
-    ids_df = spark.createDataFrame([(int(d),) for d in docids], "docid long").distinct()
-    tomb_dir = active_dir(paths, manifest, "tombstones")
-    old_tomb = spark.read.parquet(tomb_dir) if storage.exists(tomb_dir) else None
-    if old_tomb is not None:
-        # idempotent: ignore ids already tombstoned (double-delete guard)
-        ids_df = ids_df.join(old_tomb, "docid", "left_anti")
-    ids_df = ids_df.cache()
-    if ids_df.count() == 0:
-        ids_df.unpersist(blocking=False)
+    old_tomb = _tombstones(paths, manifest)
+    # idempotent: ignore ids already tombstoned (double-delete guard)
+    ids = np.setdiff1d(np.asarray(docids, dtype=np.int64), old_tomb)
+    if not ids.size:
         return manifest
-    new_tomb = old_tomb.unionByName(ids_df) if old_tomb is not None else ids_df
-    new_tomb.write.mode("overwrite").parquet(
-        storage.join(paths.root, bump_dir(manifest, "tombstones"))
-    )
-
     ts = spark.read.parquet(active_dir(paths, manifest, "term_stats"))
-    new_ts, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, ids_df)
+    new_ts, deleted, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, ids)
+    if not deleted.size:
+        return manifest
+    spark.createDataFrame(pd.DataFrame({"docid": np.union1d(old_tomb, deleted)})).write.mode(
+        "overwrite"
+    ).parquet(storage.join(paths.root, bump_dir(manifest, "tombstones")))
     # versioned rewrite: write the new stats dir, flip the pointer in
     # the same manifest commit as the stats update below (no
     # delete-then-move window), GC the old version after
@@ -287,11 +302,10 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     manifest["sum_dl"] = sum_dl - dl_del
     manifest["avgdl"] = (manifest["sum_dl"] / manifest["n_docs"]) if manifest["n_docs"] else 0.0
     manifest.setdefault("lineage", []).append(
-        {"stage": "delete_documents", "at": _now(), "n_deleted": n_del}
+        {"stage": "delete_documents", "at": _now(), "n_deleted": int(deleted.size)}
     )
     save_manifest(paths, manifest)
     gc_stale_versions(paths, manifest)
-    ids_df.unpersist(blocking=False)
     return manifest
 
 
@@ -304,12 +318,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     analog of the reference's chunk rewrite on delete
     (``index_updater.py:414-460``)."""
     paths, manifest = _open(index_dir)
-    tomb_dir = active_dir(paths, manifest, "tombstones")
-    if not storage.exists(tomb_dir):
-        return manifest
-    tomb = np.sort(
-        spark.read.parquet(tomb_dir).toPandas()["docid"].to_numpy(np.int64)
-    )
+    tomb = _tombstones(paths, manifest)
     if tomb.size == 0:
         return manifest
     tomb_bc = spark.sparkContext.broadcast(tomb)
@@ -375,12 +384,15 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     # at the manifest commit below; until then every reader still sees
     # the old versions (object-store-safe, no delete-then-move window)
     new_seg_dir = storage.join(paths.root, bump_dir(manifest, "segments"))
-    new.write.mode("overwrite").partitionBy("batch", "bucket").parquet(new_seg_dir)
+    totals = Observation("compacted_segments")
+    new.observe(
+        totals, F.sum("df").alias("n_postings"), F.sum(F.length("payload")).alias("bytes")
+    ).write.mode("overwrite").partitionBy("batch", "bucket").parquet(new_seg_dir)
 
     # purge staging too, and re-derive per-batch doc stats, so a later
     # re-finalize (e.g. after add_documents) doesn't resurrect deleted
     # docs' contribution to N/avgdl
-    tomb_df = spark.read.parquet(tomb_dir).distinct()
+    tomb_df = spark.createDataFrame(pd.DataFrame({"docid": tomb}))
     # resolve the CURRENT staging dir before bumping its pointer
     staged = spark.read.parquet(active_dir(paths, manifest, "staging")).join(
         F.broadcast(tomb_df), "docid", "left_anti"
@@ -404,23 +416,20 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     save_manifest(paths, manifest)  # commit point: both dir flips live
     gc_stale_versions(paths, manifest)
     # every batch is committed (an incomplete add was refused above), so
-    # this only re-finalizes
+    # this only re-finalizes: every batch folds into empty stats, from
+    # the rewritten segments and the purged staging (a crash before its
+    # commit leaves the old, already tombstone-net stats live)
+    manifest["folded"] = []
     manifest = _commit_batches(spark, paths, manifest)
     # per-batch n_postings/bytes are stale after the rewrite (postings
-    # moved to batch=0); refresh the manifest-level totals from the
-    # rewritten segments so build metrics stay truthful
-    m = (
-        spark.read.parquet(active_dir(paths, manifest, "segments"))
-        .agg(F.sum("df").alias("p"), F.sum(F.length("payload")).alias("b"))
-        .collect()[0]
-    )
-    manifest["n_postings"] = int(m["p"] or 0)
-    manifest["bytes"] = int(m["b"] or 0)
-    save_manifest(paths, manifest)
-    # tombstones are cleared LAST — only after the dir flips, the re-finalize
-    # (docmap/stats rebuild) and the metrics refresh are all durable. A
-    # crash anywhere before this line leaves the tombstone set intact,
-    # so a re-run redoes the whole compact (as a no-op posting filter)
+    # moved to batch=0); the manifest-level totals come from the
+    # rewrite's own observed metrics so build metrics stay truthful
+    manifest["n_postings"] = int(totals.get["n_postings"] or 0)
+    manifest["bytes"] = int(totals.get["bytes"] or 0)
+    # tombstones are cleared LAST — only after the dir flips and the
+    # re-finalize (docmap/stats rebuild) are durable, in the commit that
+    # also records the metrics refresh. A crash anywhere before this
+    # commit leaves the tombstone set intact, so a re-run redoes the whole compact (as a no-op posting filter)
     # and converges; clearing earlier would make the re-run early-return
     # at the tombstone check with docmap/metrics still stale. The clear
     # is a pointer FLIP to a fresh (never-written) version name, not an

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import posixpath
 
+import numpy as np
 import pyarrow.fs as pafs
 
 
@@ -88,6 +89,21 @@ def listdir(path: str) -> list[str]:
         return []
     sel = pafs.FileSelector(p, recursive=False)
     return [posixpath.basename(fi.path) for fi in fs.get_file_info(sel)]
+
+
+def read_column(path: str, column: str) -> np.ndarray:
+    """One column of the Parquet files under ``path``, read on the
+    driver without a Spark job (empty if the dataset is absent or has
+    no such column). For small state tables such as tombstones."""
+    import pyarrow.dataset as ds
+
+    fs, p = _split(path)
+    if fs.get_file_info(p).type == pafs.FileType.NotFound:
+        return np.empty(0)
+    d = ds.dataset(p, filesystem=fs, format="parquet")
+    if column not in d.schema.names:
+        return np.empty(0)
+    return d.to_table(columns=[column]).column(column).to_numpy()
 
 
 def read_text(path: str) -> str:
