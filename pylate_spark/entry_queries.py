@@ -205,11 +205,10 @@ def q_term_stats_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global term statistics read back from the BUILT index — integer
     outputs, so the whole SPIMI pipeline (tokenize → shard shuffle →
     block encode → stats merge) is value-hash-checked against DuckDB."""
-    from pylate_spark.plans.build import IndexPaths, active_dir, load_manifest
+    from pylate_spark.plans.build import IndexPaths, load_manifest, read_state
 
-    d = _indexed(spark, sf_dir)
-    paths = IndexPaths(d)
-    ts = spark.read.parquet(active_dir(paths, load_manifest(paths), "term_stats"))
+    paths = IndexPaths(_indexed(spark, sf_dir))
+    ts = read_state(spark, paths, load_manifest(paths), "term_stats")
     return (
         ts.select("term", "df", "cf")
         .orderBy(F.desc("df"), F.asc("term"))

@@ -27,6 +27,17 @@ Mirrors the reference's four-phase resumable build
   Batch and fan-in metrics are observed on the writes that produce
   them, never read back.
 
+State layout: this module owns it. ``manifest.json`` (the commit
+point) names the active version dir (:func:`active_dir`) of five
+Parquet tables: ``staging`` and ``segments`` (partitioned by
+``batch``; segments then by ``bucket``, each file sorted by ``(term,
+shard)``), ``term_stats``, ``docmap`` and ``tombstones``. Spark reads
+the first four only through :func:`read_state`, with the schemas
+declared once in ``STATE_SCHEMAS`` (no inference job; an empty table
+reads as empty). Tombstones are read on the driver by
+:func:`_tombstones`. Segments are written only by
+:func:`_write_segments`.
+
 Skew note (north_rule): the *salt* is the doc-range shard. A stopword's
 postings are split across all shards, so no task ever materializes more
 than ``shard_size`` postings for one term, and runs concatenate in
@@ -62,32 +73,13 @@ def _now() -> str:
 
 @dataclass
 class IndexPaths:
-    """Index directory layout. ``root`` may be a plain local path or
+    """Index directory root. ``root`` may be a plain local path or
     any URI PyArrow/Hadoop speak (``file://``, ``hdfs://``, ``s3://``)
     — all driver-side state access goes through
-    :mod:`pylate_spark.storage`, never raw ``os``/``shutil``."""
+    :mod:`pylate_spark.storage`, never raw ``os``/``shutil``. State
+    dirs are named only through :func:`active_dir`."""
 
     root: str
-
-    @property
-    def staging(self) -> str:
-        return storage.join(self.root, "staging")
-
-    @property
-    def segments(self) -> str:
-        return storage.join(self.root, "segments")
-
-    @property
-    def term_stats(self) -> str:
-        return storage.join(self.root, "term_stats")
-
-    @property
-    def docmap(self) -> str:
-        return storage.join(self.root, "docmap")
-
-    @property
-    def tombstones(self) -> str:
-        return storage.join(self.root, "tombstones")
 
     @property
     def manifest(self) -> str:
@@ -108,6 +100,30 @@ def active_dir(paths: IndexPaths, manifest: dict, name: str) -> str:
     'rename' is a long copy). Superseded versions are garbage-collected
     after the commit (:func:`gc_stale_versions`)."""
     return storage.join(paths.root, manifest.get("dirs", {}).get(name, name))
+
+
+#: the declared schema (DDL) of each state table Spark reads, in the
+#: column order a read returns (partition columns last). ``url`` holds
+#: the caller's key column, so its type is the manifest's ``key_type``.
+#: Tombstones are read on the driver (:func:`_tombstones`).
+STATE_SCHEMAS = {
+    "segments": ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in SEGMENT_SCHEMA.fields if f.name != "bucket"
+    ) + ", batch int, bucket int",
+    "staging": "shard long, docid long, url {key}, dl int, text string, batch int",
+    "term_stats": "term string, df long, cf long, merge_fan_in long",
+    "docmap": "url {key}, docid long, shard long, dl int",
+}
+
+
+def read_state(spark: SparkSession, paths: IndexPaths, manifest: dict, name: str) -> DataFrame:
+    """The active version of state table ``name``, read with its
+    declared schema. No schema-inference job runs, and a table with no
+    data file (a build whose corpus has no tokens) reads as empty. A
+    manifest written before ``key_type`` was recorded has string keys,
+    the ``url`` default."""
+    schema = STATE_SCHEMAS[name].format(key=manifest.get("key_type", "string"))
+    return spark.read.schema(schema).parquet(active_dir(paths, manifest, name))
 
 
 #: snapshot-retention window for superseded version dirs, seconds. 0 =
@@ -210,18 +226,17 @@ def save_manifest(paths: IndexPaths, manifest: dict) -> None:
 def _stage_corpus(
     spark: SparkSession,
     pages: DataFrame,
-    paths: IndexPaths,
     config: IndexConfig,
     shards_per_batch: int,
     key_col: str,
     text_col: str,
+    staging_dir: str,
     docid_base: int = 0,
-    staging_dir: str | None = None,
 ) -> dict[int, dict]:
-    """Write the staged corpus ``(batch, shard, docid, url, dl, text)``
-    partitioned by batch. ``dl`` is computed with the *native*
-    ``regexp_extract_all`` so corpus stats never re-tokenize (the UDF
-    tokenizer is asserted equal to it in tests).
+    """Append the staged corpus ``(batch, shard, docid, url, dl, text)``
+    to ``staging_dir``, partitioned by batch. ``dl`` is computed with
+    the *native* ``regexp_extract_all`` so corpus stats never
+    re-tokenize (the UDF tokenizer is asserted equal to it in tests).
 
     Bandwidth shape (round 4): the full rows cross the wire exactly
     once — :func:`assign_docids` fixes the bucket geometry from a
@@ -243,6 +258,7 @@ def _stage_corpus(
     # exchange and the staging write (Catalyst prunes scans, but the
     # explicit select also bounds what the wide stage carries)
     pages = pages.select(key_col, text_col)
+    key_type = pages.schema[key_col].dataType.simpleString()
     with_ids = assign_docids(pages, config.shard_size, key_col=key_col)
     if docid_base:
         with_ids = with_ids.withColumn("docid", F.col("docid") + F.lit(docid_base)).withColumn(
@@ -260,8 +276,7 @@ def _stage_corpus(
             F.col(text_col).alias("text"),
         )
     )
-    out = staging_dir or paths.staging
-    staged.write.mode("append").partitionBy("batch").parquet(out)
+    staged.write.mode("append").partitionBy("batch").parquet(staging_dir)
     # density guard (columns-pruned scan of what was just written): a
     # non-deterministic input DataFrame would desynchronize the counts
     # pass from the rank pass and corrupt docids silently
@@ -277,7 +292,7 @@ def _stage_corpus(
     # (n·docid ~ 10^24 at the design point) and Spark wraps silently.
     d38 = F.col("docid").cast("decimal(38,0)")
     rows = (
-        spark.read.parquet(out)
+        spark.read.schema(STATE_SCHEMAS["staging"].format(key=key_type)).parquet(staging_dir)
         .where((F.col("batch") >= docid_base // (config.shard_size * shards_per_batch))
                & (F.col("docid") >= docid_base))
         .groupBy("batch")
@@ -317,6 +332,36 @@ def _doc_stats() -> list:
     ]
 
 
+def _write_segments(df: DataFrame, seg_dir: str, batch: int):
+    """The one segment writer: write segment rows ``df``
+    (SEGMENT_SCHEMA) as the whole ``batch=<batch>`` dir of ``seg_dir``,
+    one file per term bucket (``repartition("bucket")``; otherwise every
+    task writes a tiny file into every bucket dir), each sorted by
+    ``(term, shard)``. Returns the metrics observed on the write.
+
+    Writing into the batch dir, partitioned by ``bucket`` alone, makes
+    the ``(bucket, term, shard)`` sort satisfy the writer's required
+    order: it is the one sort in the plan. Do not partition by a
+    literal ``batch`` column: the optimizer can fold it out of a sort,
+    so the writer adds its own ``(batch, bucket)`` sort, which either
+    replaces the term sort or keeps term order only by being stable."""
+    obs = Observation()
+    (
+        df.repartition("bucket")
+        .sortWithinPartitions("bucket", "term", "shard")
+        .observe(
+            obs,
+            F.sum("df").alias("n_postings"),
+            F.sum(F.length("payload")).alias("bytes"),
+            F.count(F.lit(1)).alias("n_runs"),
+        )
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(storage.join(seg_dir, f"batch={batch}"))
+    )
+    return obs.get
+
+
 def _build_one_batch(
     spark: SparkSession,
     paths: IndexPaths,
@@ -328,15 +373,7 @@ def _build_one_batch(
     """Tokenize → shuffle-by-shard → encode → append segments for one
     batch of shards. Returns the manifest metrics entry."""
     t0 = time.time()
-    seg_dir = active_dir(paths, manifest, "segments")
-    staging_dir = active_dir(paths, manifest, "staging")
-    # a batch that previously died mid-write is discarded wholesale —
-    # the batch directory is the atomic unit of commit (the analog of
-    # the reference's per-chunk save + chunk-exists resume check,
-    # ``index_saver.py:28-50``)
-    batch_dir = storage.join(seg_dir, f"batch={batch}")
-    storage.rmtree(batch_dir)
-    staged = spark.read.parquet(staging_dir).where(F.col("batch") == batch)
+    staged = read_state(spark, paths, manifest, "staging").where(F.col("batch") == batch)
     block_size, n_buckets = config.block_size, config.term_buckets
     # SPIMI proper: exchange the *text* by doc-range shard first, then
     # tokenize → local sort → encode fused in ONE wide stage. The long
@@ -358,30 +395,12 @@ def _build_one_batch(
             lambda it: arrow_carry_iterator(it, block_size),
             schema=SEGMENT_SCHEMA,
         )
-        .withColumn("batch", F.lit(batch))
     )
-    # co-locate each term bucket into one output file per batch:
-    # without this, every encode task writes into every bucket dir
-    # (tasks × buckets tiny files — a small-files explosion that slows
-    # both the write and every later bucket-pruned query scan). The
-    # extra shuffle moves only the compressed index, not the corpus.
-    # The batch metrics are observed in the write's result stage, after
-    # its last exchange, instead of re-reading what was written.
-    obs = Observation(f"segments_batch_{batch}")
-    (
-        encoded.repartition("bucket")
-        .sortWithinPartitions("term", "shard")
-        .observe(
-            obs,
-            F.sum("df").alias("n_postings"),
-            F.sum(F.length("payload")).alias("bytes"),
-            F.count(F.lit(1)).alias("n_runs"),
-        )
-        .write.mode("append")
-        .partitionBy("batch", "bucket")
-        .parquet(seg_dir)
-    )
-    m = obs.get
+    # a batch that previously died mid-write is replaced wholesale: the
+    # batch directory is the atomic unit of commit (the analog of the
+    # reference's per-chunk save + chunk-exists resume check,
+    # ``index_saver.py:28-50``)
+    m = _write_segments(encoded, active_dir(paths, manifest, "segments"), batch)
     # doc stats from the staging guard; a batch staged before they were
     # recorded there computes them here
     d = manifest["batches"].get(str(batch), {})
@@ -440,7 +459,7 @@ def _subtract_deleted(
     sum_dl)."""
     config, spb = _geometry(manifest)
     ids = np.asarray(ids, dtype=np.int64)
-    staged = spark.read.parquet(active_dir(paths, manifest, "staging")).where(
+    staged = read_state(spark, paths, manifest, "staging").where(
         in_list("batch", np.unique(ids // (config.shard_size * spb)).tolist())
     )
     doomed = staged.join(
@@ -495,16 +514,12 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
     new = sorted(int(k) for k in batches if int(k) not in folded)
     config, spb = _geometry(manifest)
     parts = (
-        spark.read.parquet(active_dir(paths, manifest, "segments"))
+        read_state(spark, paths, manifest, "segments")
         .where(in_list("batch", new))
         .select("term", "df", "cf", F.lit(1).cast("long").alias("merge_fan_in"))
     )
     if folded:
-        parts = (
-            spark.read.parquet(active_dir(paths, manifest, "term_stats"))
-            .select("term", "df", "cf", "merge_fan_in")
-            .unionByName(parts)
-        )
+        parts = read_state(spark, paths, manifest, "term_stats").unionByName(parts)
     ts = parts.groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf"), F.sum("merge_fan_in").alias("merge_fan_in")
     )
@@ -519,7 +534,7 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
         fan, F.avg("merge_fan_in").alias("avg"), F.max("merge_fan_in").alias("max")
     ).write.mode("overwrite").parquet(ts_dir)
 
-    staged = spark.read.parquet(active_dir(paths, manifest, "staging"))
+    staged = read_state(spark, paths, manifest, "staging")
     dm_dir = storage.join(paths.root, bump_dir(manifest, "docmap"))
     staged.select("url", "docid", "shard", "dl").write.mode("overwrite").parquet(dm_dir)
 
@@ -596,8 +611,7 @@ def build_index(
         storage.rmtree(staging_dir)  # killed mid-staging → redo atomically
         t0 = time.time()
         staged = _stage_corpus(
-            spark, pages, paths, config, shards_per_batch, key_col, text_col,
-            staging_dir=staging_dir,
+            spark, pages, config, shards_per_batch, key_col, text_col, staging_dir=staging_dir
         )
         manifest = {
             "staged": True,
@@ -607,6 +621,8 @@ def build_index(
             # batch mapping must stay stable across incremental adds
             # (every later step reads it back via _geometry)
             "shards_per_batch": int(shards_per_batch),
+            # the staged key column's type, for the declared schemas
+            "key_type": pages.schema[key_col].dataType.simpleString(),
             "batches": _staged_entries(staged),
             "lineage": [{"stage": "staging", "at": _now(), "source": "caller DataFrame",
                          "stage_sec": round(time.time() - t0, 3)}],

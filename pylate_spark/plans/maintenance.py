@@ -44,7 +44,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pylate_spark import storage
@@ -58,11 +58,13 @@ from pylate_spark.plans.build import (
     _staged_entries,
     _subtract_deleted,
     _tombstones,
+    _write_segments,
     active_dir,
     build_index,
     bump_dir,
     gc_stale_versions,
     load_manifest,
+    read_state,
     save_manifest,
 )
 from pylate_spark.plans.segments import SEGMENT_SCHEMA
@@ -223,8 +225,8 @@ def add_documents(
 
     t0 = time.time()
     staged = _stage_corpus(
-        spark, new_pages, paths, config, spb, key_col, text_col,
-        docid_base=docid_base, staging_dir=staging_dir,
+        spark, new_pages, config, spb, key_col, text_col,
+        staging_dir=staging_dir, docid_base=docid_base,
     )
     stage_sec = round(time.time() - t0, 3)
     if staged:
@@ -284,7 +286,7 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     ids = np.setdiff1d(np.asarray(docids, dtype=np.int64), old_tomb)
     if not ids.size:
         return manifest
-    ts = spark.read.parquet(active_dir(paths, manifest, "term_stats"))
+    ts = read_state(spark, paths, manifest, "term_stats")
     new_ts, deleted, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, ids)
     if not deleted.size:
         return manifest
@@ -370,38 +372,29 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
                 block_size,
             )
 
-    new = (
-        spark.read.parquet(active_dir(paths, manifest, "segments"))
-        .drop("batch")
-        .mapInArrow(rewrite, schema=SEGMENT_SCHEMA)
-        .withColumn("batch", F.lit(0))
-        # co-locate buckets into one file each (small-files guard, same
-        # as the build path) — the shuffle moves only compressed runs
-        .repartition("bucket")
-        .sortWithinPartitions("term", "shard")
+    new = read_state(spark, paths, manifest, "segments").drop("batch").mapInArrow(
+        rewrite, schema=SEGMENT_SCHEMA
     )
     # versioned rewrites: new segments + staging dirs become live only
     # at the manifest commit below; until then every reader still sees
     # the old versions (object-store-safe, no delete-then-move window)
     new_seg_dir = storage.join(paths.root, bump_dir(manifest, "segments"))
-    totals = Observation("compacted_segments")
-    new.observe(
-        totals, F.sum("df").alias("n_postings"), F.sum(F.length("payload")).alias("bytes")
-    ).write.mode("overwrite").partitionBy("batch", "bucket").parquet(new_seg_dir)
+    totals = _write_segments(new, new_seg_dir, 0)
 
     # purge staging too, and re-derive per-batch doc stats, so a later
     # re-finalize (e.g. after add_documents) doesn't resurrect deleted
     # docs' contribution to N/avgdl
     tomb_df = spark.createDataFrame(pd.DataFrame({"docid": tomb}))
     # resolve the CURRENT staging dir before bumping its pointer
-    staged = spark.read.parquet(active_dir(paths, manifest, "staging")).join(
+    staged = read_state(spark, paths, manifest, "staging").join(
         F.broadcast(tomb_df), "docid", "left_anti"
     )
     new_stg_dir = storage.join(paths.root, bump_dir(manifest, "staging"))
     staged.write.mode("overwrite").partitionBy("batch").parquet(new_stg_dir)
+    # the bumped pointer now names the purged copy
     per_batch = {
         int(r["batch"]): r
-        for r in spark.read.parquet(new_stg_dir)
+        for r in read_state(spark, paths, manifest, "staging")
         .groupBy("batch")
         .agg(*_doc_stats())
         .collect()
@@ -424,8 +417,8 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     # per-batch n_postings/bytes are stale after the rewrite (postings
     # moved to batch=0); the manifest-level totals come from the
     # rewrite's own observed metrics so build metrics stay truthful
-    manifest["n_postings"] = int(totals.get["n_postings"] or 0)
-    manifest["bytes"] = int(totals.get["bytes"] or 0)
+    manifest["n_postings"] = int(totals["n_postings"] or 0)
+    manifest["bytes"] = int(totals["bytes"] or 0)
     # tombstones are cleared LAST — only after the dir flips and the
     # re-finalize (docmap/stats rebuild) are durable, in the commit that
     # also records the metrics refresh. A crash anywhere before this
@@ -467,17 +460,20 @@ def rebuild_index(
     manifest uses for state dirs). External docid references (subsets,
     qrels keyed by docid) must be re-resolved through the new docmap
     via url. The new index keeps the source's geometry (config and
-    ``shards_per_batch`` from its manifest).
+    ``shards_per_batch`` from its manifest). The live documents are
+    staging minus the tombstone set (``build._tombstones``, read on the
+    driver), removed by a broadcast anti-join, as in :func:`compact`.
 
     Returns the new manifest at ``dst_dir``."""
     paths, manifest = _open(index_dir)
     config, spb = _geometry(manifest)
 
-    live = spark.read.parquet(active_dir(paths, manifest, "staging"))
-    tomb_dir = active_dir(paths, manifest, "tombstones")
-    if storage.exists(tomb_dir):
-        tomb = spark.read.parquet(tomb_dir).distinct()
-        live = live.join(F.broadcast(tomb), "docid", "left_anti")
+    live = read_state(spark, paths, manifest, "staging")
+    tomb = _tombstones(paths, manifest)
+    if tomb.size:
+        live = live.join(
+            F.broadcast(spark.createDataFrame(pd.DataFrame({"docid": tomb}))), "docid", "left_anti"
+        )
 
     new_manifest = build_index(
         spark, live.select("url", "text"), dst_dir, config=config, shards_per_batch=spb
@@ -503,19 +499,15 @@ def consolidate_segments(spark: SparkSession, index_dir: str) -> dict:
     term bucket) WITHOUT decoding payloads — per-(shard, term) runs are
     unique across batches by construction (batch-aligned docid bases),
     so consolidation is a pure file merge, the trivial-fan-in SPIMI
-    merge at the storage layer. Reference analog: chunk consolidation
-    in ``index_updater.py:414-460`` minus the recompression."""
+    merge at the storage layer. It writes through the one segment
+    writer (``build._write_segments``), so its files are term-sorted
+    like every other segment file. Reference analog: chunk
+    consolidation in ``index_updater.py:414-460`` minus the
+    recompression."""
     paths, manifest = _open(index_dir)
-    seg = spark.read.parquet(active_dir(paths, manifest, "segments")).drop("batch")
+    seg = read_state(spark, paths, manifest, "segments").drop("batch")
     new_seg_dir = storage.join(paths.root, bump_dir(manifest, "segments"))
-    (
-        seg.withColumn("batch", F.lit(0))
-        .repartition("bucket")
-        .sortWithinPartitions("term", "shard")
-        .write.mode("overwrite")
-        .partitionBy("batch", "bucket")
-        .parquet(new_seg_dir)
-    )
+    _write_segments(seg, new_seg_dir, 0)
     manifest.setdefault("lineage", []).append(
         {"stage": "consolidate_segments", "at": _now()}
     )

@@ -39,7 +39,7 @@ from pylate_spark.functions.tokenize import (
     terms_long,
     tokenize_py,
 )
-from pylate_spark.plans.build import IndexPaths, _geometry, active_dir, load_manifest
+from pylate_spark.plans.build import IndexPaths, _geometry, _tombstones, load_manifest, read_state
 from pylate_spark.plans.wand import score_shard
 from pylate_spark.worker import forget_archive_importers
 
@@ -93,8 +93,9 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     pre-reductions (a windowed (query, docid mod g) level and a
     mapInPandas partition-local top-k); both measured as pure overhead
     over the built-in partial (+2–5.5 s and +1 s per 2000-query batch
-    at 3.2M docs — profile_query.py) and were removed. A plan-shape
-    test pins the WindowGroupLimit so a regression is caught."""
+    at 3.2M docs, measured by ``scripts/profile_query.py``, now in git
+    history) and were removed. A plan-shape test pins the
+    WindowGroupLimit so a regression is caught."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -120,7 +121,7 @@ class InvertedIndex:
         # (the reference reloads its searcher after IndexUpdater runs)
         # state dirs resolve through the manifest (versioned rewrites
         # flip these pointers atomically; see plans/build.active_dir)
-        self._seg = self.spark.read.parquet(active_dir(self.paths, self.manifest, "segments"))
+        self._seg = read_state(self.spark, self.paths, self.manifest, "segments")
         # search()'s scan projection, analyzed once per handle. The
         # kernel stage routes rows by `ordinal`, a dense shard number:
         # a build's shards 0..spb-1 and an add's batch-aligned shards
@@ -141,17 +142,15 @@ class InvertedIndex:
         # re-used by every search/doc_vectors call, and a broadcast ships
         # them to executors once instead of pickling them into every
         # task closure (driver→task serialization grows with churn)
-        tomb = self._load_tombstones()
-        self._tomb_bc = (
-            self.spark.sparkContext.broadcast(tomb) if tomb is not None else None
-        )
+        tomb = _tombstones(self.paths, self.manifest)
+        self._tomb_bc = self.spark.sparkContext.broadcast(tomb) if tomb.size else None
         #: one live large-subset broadcast per handle (see search())
         self._subset_bc = None
         #: one live large-query-batch broadcast per handle (see search())
         self._qset_bc = None
         #: last search()'s kernel, for lazy closure-size observability
         self._last_kernel = None
-        if tomb is not None and tomb.size >= TOMBSTONE_COMPACT_ADVICE:
+        if tomb.size >= TOMBSTONE_COMPACT_ADVICE:
             import warnings
 
             warnings.warn(
@@ -163,7 +162,7 @@ class InvertedIndex:
     # -- id resolution (the reference's id<->docid pickles,
     #    fast_plaid.py:136-174) ------------------------------------
     def docmap(self) -> DataFrame:
-        return self.spark.read.parquet(active_dir(self.paths, self.manifest, "docmap"))
+        return read_state(self.spark, self.paths, self.manifest, "docmap")
 
     def resolve_urls(self, results: DataFrame) -> DataFrame:
         """Join ranked results back to urls (broadcast the small side)."""
@@ -223,17 +222,6 @@ class InvertedIndex:
         seg = self._seg.where(in_list("shard", shards))
         return seg.mapInPandas(gen, schema="docid long, term string, tf int, dl int")
 
-    # -- tombstones (delete support, index_updater.py:52-69) --------
-    def _load_tombstones(self) -> np.ndarray | None:
-        from pylate_spark import storage
-
-        p = active_dir(self.paths, self.manifest, "tombstones")
-        if storage.exists(p):
-            pdf = self.spark.read.parquet(p).toPandas()
-            if len(pdf):
-                return np.sort(pdf["docid"].to_numpy(dtype=np.int64))
-        return None
-
     def search(
         self,
         queries: DataFrame | list[tuple[int, str]],
@@ -270,7 +258,7 @@ class InvertedIndex:
         missing = [t for t in all_terms if t not in self._df_cache]
         if missing:
             stats = (
-                self.spark.read.parquet(active_dir(self.paths, self.manifest, "term_stats"))
+                read_state(self.spark, self.paths, self.manifest, "term_stats")
                 .where(in_list("term", missing))
                 .select("term", "df")
                 .collect()

@@ -7,6 +7,11 @@ filesystem PyArrow speaks (local, ``file://``, ``hdfs://``, ``s3://``)
 — the only place a 100 TB index can actually live. Spark itself reads
 and writes the same paths through Hadoop, which accepts the same URIs.
 
+Who reads state: ``plans.build`` owns the table formats. Spark reads
+the four large tables only through ``plans.build.read_state`` (declared
+schemas, no inference job); the tombstone set is read on the driver
+only, through :func:`read_column`, by ``plans.build._tombstones``.
+
 Commit protocol notes (SURVEY §1.1):
 
 - The **manifest is the single atomic commit point**: every state

@@ -132,7 +132,7 @@ def test_compact_preserves_results(spark, corpus_pdf, index_dir):
     manifest = compact(spark, index_dir)
     assert manifest["finalized"]
     idx = InvertedIndex(spark, index_dir)
-    assert idx._load_tombstones() is None
+    assert idx._tomb_bc is None
     after = _ranked(idx.search(QUERIES, k=K))
     assert before == after
 

@@ -131,8 +131,8 @@ def test_add_replay_after_crash_mid_staging(spark, tmp_path):
     manifest["pending_add"] = {"first_new_batch": 1, "docid_base": 64, "epoch_key": "ckpt#9"}
     save_manifest(paths, manifest)
     extra_pdf = synth_pages_pandas(16, seed=5)
-    _stage_corpus(spark, spark.createDataFrame(extra_pdf), paths, CFG, SPB,
-                  "url", "text", docid_base=64)
+    _stage_corpus(spark, spark.createDataFrame(extra_pdf), CFG, SPB, "url", "text",
+                  staging_dir=active_dir(paths, manifest, "staging"), docid_base=64)
     # ... crash; Structured Streaming replays the epoch:
     m = add_documents(spark, spark.createDataFrame(extra_pdf), d, epoch_key="ckpt#9", epoch_monotonic=True)
     assert m["n_docs"] == 64 + 16  # exactly once, no duplicates
