@@ -21,22 +21,23 @@ Mirrors the reference's four-phase resumable build
   — the active ``term_stats`` plus the per-(shard, term) runs of the
   batches not yet folded, summed per term (the SPIMI merge; the
   recorded ``merge_fan_in`` is runs/term) — so an add's stats work
-  scales with its new batches only. Then the docmap, and the manifest
-  with corpus stats, config, lineage and per-batch metrics — the
-  analog of ``metadata.json`` (``collection_indexer.py:578-591``).
+  scales with its new batches only. Then the manifest with corpus
+  stats, config, lineage and per-batch metrics — the analog of
+  ``metadata.json`` (``collection_indexer.py:578-591``).
   Batch and fan-in metrics are observed on the writes that produce
   them, never read back.
 
 State layout: this module owns it. ``manifest.json`` (the commit
-point) names the active version dir (:func:`active_dir`) of five
+point) names the active version dir (:func:`active_dir`) of four
 Parquet tables: ``staging`` and ``segments`` (partitioned by
 ``batch``; segments then by ``bucket``, each file sorted by ``(term,
-shard)``), ``term_stats``, ``docmap`` and ``tombstones``. Spark reads
-the first four only through :func:`read_state`, with the schemas
-declared once in ``STATE_SCHEMAS`` (no inference job; an empty table
-reads as empty). Tombstones are read on the driver by
-:func:`_tombstones`. Segments are written only by
-:func:`_write_segments`.
+shard)``), ``term_stats`` and ``tombstones``. Staging is also the
+document table: the url ↔ docid map is its projection
+(``InvertedIndex.docmap``), not a stored copy. Spark reads the first
+three only through :func:`read_state`, with the schemas declared once
+in ``STATE_SCHEMAS`` (no inference job; an empty table reads as
+empty). Tombstones are read on the driver by :func:`_tombstones`.
+Segments are written only by :func:`_write_segments`.
 
 Skew note (north_rule): the *salt* is the doc-range shard. A stopword's
 postings are split across all shards, so no task ever materializes more
@@ -87,11 +88,11 @@ class IndexPaths:
 
 
 #: logical state directories whose rewrites are versioned
-_VERSIONED = ("segments", "term_stats", "docmap", "staging", "tombstones")
+_VERSIONED = ("segments", "term_stats", "staging", "tombstones")
 
 
 def active_dir(paths: IndexPaths, manifest: dict, name: str) -> str:
-    """Resolve a logical state dir (segments/term_stats/docmap/staging)
+    """Resolve a logical state dir (segments/term_stats/staging/tombstones)
     to its current physical directory. Rewrites write a NEW versioned
     directory and flip this pointer inside the atomic manifest commit —
     the object-store-safe swap: there is never a window where the live
@@ -112,7 +113,6 @@ STATE_SCHEMAS = {
     ) + ", batch int, bucket int",
     "staging": "shard long, docid long, url {key}, dl int, text string, batch int",
     "term_stats": "term string, df long, cf long, merge_fan_in long",
-    "docmap": "url {key}, docid long, shard long, dl int",
 }
 
 
@@ -177,7 +177,9 @@ def gc_stale_versions(paths: IndexPaths, manifest: dict, retain_s: float | None 
     dirs = manifest.get("dirs", {})
     active = {dirs.get(n, n) for n in _VERSIONED}
     retired = manifest.setdefault("retired", {})
-    pat = re.compile(r"^(" + "|".join(_VERSIONED) + r")(_v\d+)?$")
+    # "docmap": the url map indexes stored before staging became the
+    # document table; never active, so its dirs are swept
+    pat = re.compile(r"^(" + "|".join((*_VERSIONED, "docmap")) + r")(_v\d+)?$")
     now = time.time()
     present = set(storage.listdir(paths.root))
     changed = False
@@ -485,8 +487,8 @@ def _subtract_deleted(
 
 
 def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
-    """Fold the batches not yet folded into the term stats, then write
-    the docmap and the corpus stats.
+    """Fold the batches not yet folded into the term stats and commit
+    them with the corpus stats.
 
     ``term_stats' = term_stats ⊕ runs(new batches)``: the active stats
     and the new batches' (shard, term) runs in one union, summed per
@@ -500,14 +502,17 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
     ``manifest["folded"]`` lists the folded batch ids and flips in the
     same atomic commit as the new term_stats dir, so a crash before the
     commit re-folds from the old stats. A manifest without the record
-    (a fresh build, compact's re-finalize, an index written before the
-    record existed) folds every batch into empty stats. A term whose df
-    falls to 0 leaves the stats; if it returns, its ``merge_fan_in``
-    restarts from the runs folded since.
+    (a fresh build, compact, an index written before the record
+    existed) folds every batch into empty stats. A term whose df falls
+    to 0 leaves the stats; if it returns, its ``merge_fan_in`` restarts
+    from the runs folded since.
 
-    term_stats and docmap are written as NEW version dirs and flipped
-    in the same manifest commit that flips ``finalized`` (an in-place
-    overwrite would leave a torn directory on a crash mid-write)."""
+    term_stats is written as a NEW version dir and flipped in the same
+    manifest commit that flips ``finalized`` (an in-place overwrite
+    would leave a torn directory on a crash mid-write), together with
+    any dir the caller bumped before (compact's segments, staging and
+    tombstones). The totals ``n_postings`` / ``bytes`` are the sum of
+    the per-batch entries."""
     t0 = time.time()
     batches = manifest["batches"]
     folded = set(manifest.get("folded", []))
@@ -533,10 +538,6 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
     ts.observe(
         fan, F.avg("merge_fan_in").alias("avg"), F.max("merge_fan_in").alias("max")
     ).write.mode("overwrite").parquet(ts_dir)
-
-    staged = read_state(spark, paths, manifest, "staging")
-    dm_dir = storage.join(paths.root, bump_dir(manifest, "docmap"))
-    staged.select("url", "docid", "shard", "dl").write.mode("overwrite").parquet(dm_dir)
 
     added = [batches[str(b)] for b in new]
     n_docs = (manifest["n_docs"] if folded else 0) - n_del + sum(
@@ -566,8 +567,8 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
 def _commit_batches(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
     """Build every staged batch the manifest has not committed, each
     followed by its own durable manifest commit, then finalize. The one
-    commit path for a build, a resumed build, an add, a resumed add and
-    compact's re-finalize; it reads the geometry from the manifest."""
+    commit path for a build, a resumed build, an add and a resumed add;
+    it reads the geometry from the manifest."""
     config, spb = _geometry(manifest)
     for batch in range(manifest["n_batches"]):
         key = str(batch)

@@ -52,6 +52,7 @@ from pylate_spark.plans.build import (
     IndexPaths,
     _commit_batches,
     _doc_stats,
+    _finalize,
     _geometry,
     _now,
     _stage_corpus,
@@ -139,8 +140,8 @@ def _repair_pending_add(paths: IndexPaths, manifest: dict) -> dict:
     """If a previous add crashed between its pending_add marker and the
     staging commit, its orphan staged rows were never indexed — purge
     them before ANY operation that consumes staging (delete stats
-    deltas, compact's staging rewrite, docmap re-finalize), not just
-    before the next add. The interrupted epoch's source replays it."""
+    deltas, compact's staging rewrite), not just before the next add.
+    The interrupted epoch's source replays it."""
     pending = manifest.get("pending_add")
     if pending:
         _purge_staged_batches(
@@ -191,7 +192,8 @@ def add_documents(
 
     Only the new batches are built and folded into the term stats
     (``build._finalize``); committed segments and deleted documents are
-    not re-read. The docmap is still rewritten from all of staging.
+    not re-read, and no document table is rewritten: the url map is a
+    projection of staging (``InvertedIndex.docmap``).
 
     ``epoch_key`` makes the add idempotent per key (exactly-once under
     Structured Streaming epoch replay): an already-applied key returns
@@ -316,9 +318,15 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     re-encode, one *vectorized* codec pass per Arrow batch (all
     surviving groups of a batch are re-encoded in a single
     ``encode_group_arrow`` call — no per-row Python encode), rewrite
-    the segments table, clear tombstones, re-finalize stats — the
-    analog of the reference's chunk rewrite on delete
-    (``index_updater.py:414-460``)."""
+    the segments table and staging, clear tombstones, refold the stats
+    — the analog of the reference's chunk rewrite on delete
+    (``index_updater.py:414-460``).
+
+    ONE atomic commit: the new segments, staging, tombstones and
+    term_stats versions all flip in ``build._finalize``'s manifest
+    write. A crash anywhere before it leaves the pre-compact index
+    fully live, and a re-run redoes the whole compact. Every batch is
+    committed (an incomplete add is refused), so nothing is built."""
     paths, manifest = _open(index_dir)
     tomb = _tombstones(paths, manifest)
     if tomb.size == 0:
@@ -375,22 +383,20 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     new = read_state(spark, paths, manifest, "segments").drop("batch").mapInArrow(
         rewrite, schema=SEGMENT_SCHEMA
     )
-    # versioned rewrites: new segments + staging dirs become live only
-    # at the manifest commit below; until then every reader still sees
-    # the old versions (object-store-safe, no delete-then-move window)
-    new_seg_dir = storage.join(paths.root, bump_dir(manifest, "segments"))
-    totals = _write_segments(new, new_seg_dir, 0)
-
-    # purge staging too, and re-derive per-batch doc stats, so a later
-    # re-finalize (e.g. after add_documents) doesn't resurrect deleted
-    # docs' contribution to N/avgdl
+    # every rewritten run lands in batch 0; its entry carries the
+    # rewrite's observed totals, the other batches' are zeroed, so the
+    # finalize's per-batch sum stays the one source of the totals
+    totals = _write_segments(new, storage.join(paths.root, bump_dir(manifest, "segments")), 0)
+    # purge staging too, and re-derive per-batch doc stats, so the
+    # fold below (and every later one) counts only live docs
     tomb_df = spark.createDataFrame(pd.DataFrame({"docid": tomb}))
     # resolve the CURRENT staging dir before bumping its pointer
     staged = read_state(spark, paths, manifest, "staging").join(
         F.broadcast(tomb_df), "docid", "left_anti"
     )
-    new_stg_dir = storage.join(paths.root, bump_dir(manifest, "staging"))
-    staged.write.mode("overwrite").partitionBy("batch").parquet(new_stg_dir)
+    staged.write.mode("overwrite").partitionBy("batch").parquet(
+        storage.join(paths.root, bump_dir(manifest, "staging"))
+    )
     # the bumped pointer now names the purged copy
     per_batch = {
         int(r["batch"]): r
@@ -399,41 +405,22 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
         .agg(*_doc_stats())
         .collect()
     }
-    for key, entry in manifest.get("batches", {}).items():
+    for key, entry in manifest["batches"].items():
         r = per_batch.get(int(key))
         for f in ("n_docs", "n_docs_tokenized", "sum_dl"):
             entry[f] = int(r[f]) if r is not None else 0
+        for f in ("n_postings", "bytes", "n_runs"):
+            entry[f] = int(totals[f] or 0) if key == "0" else 0
+    # the cleared tombstone set is a fresh, empty version (removing a
+    # crashed delete's orphan of that name): the old dir retires through
+    # the retention window, so a reader on the pre-compact snapshot
+    # keeps filtering deleted docs out of the old segments
+    storage.rmtree(storage.join(paths.root, bump_dir(manifest, "tombstones")))
+    manifest["folded"] = []
     manifest.setdefault("lineage", []).append(
         {"stage": "compact", "at": _now(), "n_tombstones_purged": int(tomb.size)}
     )
-    save_manifest(paths, manifest)  # commit point: both dir flips live
-    gc_stale_versions(paths, manifest)
-    # every batch is committed (an incomplete add was refused above), so
-    # this only re-finalizes: every batch folds into empty stats, from
-    # the rewritten segments and the purged staging (a crash before its
-    # commit leaves the old, already tombstone-net stats live)
-    manifest["folded"] = []
-    manifest = _commit_batches(spark, paths, manifest)
-    # per-batch n_postings/bytes are stale after the rewrite (postings
-    # moved to batch=0); the manifest-level totals come from the
-    # rewrite's own observed metrics so build metrics stay truthful
-    manifest["n_postings"] = int(totals["n_postings"] or 0)
-    manifest["bytes"] = int(totals["bytes"] or 0)
-    # tombstones are cleared LAST — only after the dir flips and the
-    # re-finalize (docmap/stats rebuild) are durable, in the commit that
-    # also records the metrics refresh. A crash anywhere before this
-    # commit leaves the tombstone set intact, so a re-run redoes the whole compact (as a no-op posting filter)
-    # and converges; clearing earlier would make the re-run early-return
-    # at the tombstone check with docmap/metrics still stale. The clear
-    # is a pointer FLIP to a fresh (never-written) version name, not an
-    # rmtree: an rmtree would yank the dir out from under a reader
-    # holding the pre-compact manifest snapshot (whose old segments are
-    # retained for GC_RETAIN_SECONDS — it needs the matching tombstones
-    # to keep filtering deleted docs). The old dir retires through the
-    # same retention window as every other superseded version.
-    bump_dir(manifest, "tombstones")
-    save_manifest(paths, manifest)
-    gc_stale_versions(paths, manifest)
+    manifest = _finalize(spark, paths, manifest)
     tomb_bc.unpersist(blocking=False)
     return manifest
 
@@ -458,11 +445,12 @@ def rebuild_index(
     atomic rename doesn't exist on object stores; a root-level pointer
     flip in the serving layer is the same commit discipline the
     manifest uses for state dirs). External docid references (subsets,
-    qrels keyed by docid) must be re-resolved through the new docmap
-    via url. The new index keeps the source's geometry (config and
-    ``shards_per_batch`` from its manifest). The live documents are
-    staging minus the tombstone set (``build._tombstones``, read on the
-    driver), removed by a broadcast anti-join, as in :func:`compact`.
+    qrels keyed by docid) must be re-resolved through the new
+    ``InvertedIndex.docmap`` via url. The new index keeps the source's
+    geometry (config and ``shards_per_batch`` from its manifest). The
+    live documents are staging minus the tombstone set
+    (``build._tombstones``, read on the driver), removed by a broadcast
+    anti-join, as in :func:`compact`.
 
     Returns the new manifest at ``dst_dir``."""
     paths, manifest = _open(index_dir)

@@ -162,7 +162,15 @@ class InvertedIndex:
     # -- id resolution (the reference's id<->docid pickles,
     #    fast_plaid.py:136-174) ------------------------------------
     def docmap(self) -> DataFrame:
-        return read_state(self.spark, self.paths, self.manifest, "docmap")
+        """``(url, docid, shard, dl)`` of every document in this
+        handle's snapshot: staging projected, read only in the batches
+        its manifest committed (a later add appends to the same staging
+        dir). Deleted documents stay until a compact purges them."""
+        return (
+            read_state(self.spark, self.paths, self.manifest, "staging")
+            .where(in_list("batch", [int(b) for b in self.manifest["batches"]]))
+            .select("url", "docid", "shard", "dl")
+        )
 
     def resolve_urls(self, results: DataFrame) -> DataFrame:
         """Join ranked results back to urls (broadcast the small side)."""

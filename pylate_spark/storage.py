@@ -1,14 +1,14 @@
 """Object-store-safe filesystem layer for index state.
 
 Every driver-side touch of index state (manifest, staging, segments,
-term_stats, docmap, tombstones) goes through this module instead of raw
+term_stats, tombstones) goes through this module instead of raw
 ``os``/``shutil`` calls, so an index directory can live on any
 filesystem PyArrow speaks (local, ``file://``, ``hdfs://``, ``s3://``)
 — the only place a 100 TB index can actually live. Spark itself reads
 and writes the same paths through Hadoop, which accepts the same URIs.
 
 Who reads state: ``plans.build`` owns the table formats. Spark reads
-the four large tables only through ``plans.build.read_state`` (declared
+the three large tables only through ``plans.build.read_state`` (declared
 schemas, no inference job); the tombstone set is read on the driver
 only, through :func:`read_column`, by ``plans.build._tombstones``.
 
@@ -22,7 +22,7 @@ Commit protocol notes (SURVEY §1.1):
   temp object then copies over the target key), which S3 applies
   atomically per key — readers see either the old or the new manifest,
   never a torn one.
-- Directory rewrites (segments/term_stats/docmap/staging) never swap
+- Directory rewrites (segments/term_stats/staging/tombstones) never swap
   in place: the new data is written to a fresh *versioned* directory
   and the manifest's pointer flips inside the same atomic commit
   (``plans.build.active_dir``/``bump_dir``). There is no window where

@@ -66,7 +66,7 @@ def test_add_to_manifest_without_batch_span(spark, tmp_path):
     assert m["n_docs"] == 64 + 16
     span = CFG.shard_size * 64
     assert m["batches"]["1"]["status"] == "committed" and m["batches"]["1"]["n_docs"] == 16
-    docmap = spark.read.parquet(active_dir(paths, m, "docmap"))
+    docmap = InvertedIndex(spark, d).docmap()
     assert docmap.where(f"docid >= {span}").agg({"docid": "min"}).collect()[0][0] == span
     assert docmap.where(f"docid >= {span}").count() == 16
     assert _n_hits(spark, d) > n_before
@@ -136,7 +136,7 @@ def test_add_replay_after_crash_mid_staging(spark, tmp_path):
     # ... crash; Structured Streaming replays the epoch:
     m = add_documents(spark, spark.createDataFrame(extra_pdf), d, epoch_key="ckpt#9", epoch_monotonic=True)
     assert m["n_docs"] == 64 + 16  # exactly once, no duplicates
-    docmap = spark.read.parquet(active_dir(paths, load_manifest(paths), "docmap"))
+    docmap = InvertedIndex(spark, d).docmap()
     assert docmap.count() == 80  # orphan staged rows purged, one add applied
     assert docmap.select("docid").distinct().count() == 80
 
@@ -254,9 +254,10 @@ def test_versioned_swap_crash_windows(spark, tmp_path):
     manifest = load_manifest(paths)
     gc_stale_versions(paths, manifest)
     names = storage.listdir(d)
-    for logical in ("segments", "term_stats", "docmap", "staging"):
+    for logical in ("segments", "term_stats", "staging"):
         versions = [n for n in names if n == logical or n.startswith(logical + "_v")]
         assert len(versions) == 1, (logical, versions)
+    assert not [n for n in names if n.startswith("docmap")]
     after = InvertedIndex(spark, d).search([(0, "the w00004")], k=10).collect()
     assert after == before
     assert victim not in {r["docid"] for r in after}
@@ -389,3 +390,58 @@ def test_delete_crash_before_commit_leaves_index_intact(spark, tmp_path):
     assert m["n_docs"] == n_docs_before - 1
     got = InvertedIndex(spark, d).search([(0, "the w00004")], k=10).collect()
     assert victim not in {r["docid"] for r in got}
+
+
+def test_compact_crash_before_commit_leaves_index_intact(spark, tmp_path, monkeypatch):
+    """compact is one atomic commit (``build._finalize``'s manifest
+    write): killed there, the manifest on disk is byte-identical, a
+    fresh handle ranks as before, the tombstones are intact, and a
+    re-run compacts to the oracle's ranking of the live documents.
+
+    A delete killed at its commit first leaves a tombstone dir of the
+    version name compact allocates for the cleared set; compact must
+    not adopt that orphan."""
+    import numpy as np
+
+    import pylate_spark.plans.build as B
+    import pylate_spark.plans.maintenance as M
+    from pylate_spark import storage
+    from pylate_spark.oracle import OracleIndex
+
+    pages = synth_pages_pandas(128)
+    d = _build(spark, str(tmp_path / "idx"), n=128)
+    doomed = list(range(0, 128, 5))
+    delete_documents(spark, d, doomed)
+    paths = IndexPaths(d)
+    queries = [(0, "the w00004"), (1, "w00001 w00002 of")]
+
+    def ranked():
+        rows = InvertedIndex(spark, d).search(queries, k=10).orderBy("query_id", "rank").collect()
+        return [(r["query_id"], r["rank"], r["docid"], r["score"]) for r in rows]
+
+    def dying(paths_, manifest_):
+        raise RuntimeError("killed at the commit")
+
+    want = ranked()
+    kept = want[0][2]  # a live, top-ranked doc the killed delete names
+    monkeypatch.setattr(M, "save_manifest", dying)
+    with pytest.raises(RuntimeError):
+        delete_documents(spark, d, [kept])
+    monkeypatch.undo()
+    committed = storage.read_text(paths.manifest)
+    monkeypatch.setattr(B, "save_manifest", dying)
+    with pytest.raises(RuntimeError, match="killed at the commit"):
+        compact(spark, d)
+    monkeypatch.undo()
+    assert storage.read_text(paths.manifest) == committed
+    assert ranked() == want
+    assert B._tombstones(paths, load_manifest(paths)).tolist() == doomed
+
+    m = compact(spark, d)
+    assert B._tombstones(paths, m).size == 0
+    oracle = OracleIndex(list(enumerate(pages["text"])))
+    oracle.delete(set(doomed))
+    got = ranked()
+    expected = oracle.search_all(queries, k=10)
+    assert [g[:3] for g in got] == [w[:3] for w in expected]
+    np.testing.assert_allclose([g[3] for g in got], [w[3] for w in expected], rtol=1e-5)
