@@ -7,7 +7,7 @@ lightonai/pylate (reference at /root/reference), re-expressed Spark-first:
   ``(url, warc_ts, html, text, lang)``: vectorized pandas-UDF
   tokenization, deterministic dense docid assignment, doc-range
   sharding (the salting mechanism for head-term skew), per-(shard,
-  term) delta+varint posting blocks with block-max metadata, persisted
+  term) gap+varint posting runs (format 2) with block-max metadata, persisted
   as partitioned Parquet segments with a resumable per-shard commit
   manifest (mirrors the reference's resumable chunked build,
   ``pylate/indexes/stanford_nlp/indexing/collection_indexer.py:62-79``).

@@ -218,8 +218,8 @@ def q_term_stats_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_doc_vectors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Indexed representations of fixed docids decoded back out of the
-    posting payloads (selective block decode) — integer outputs, so the
-    varint/delta codec roundtrip is value-hash-checked against DuckDB's
+    posting payloads — integer outputs, so the format-2 varint codec
+    roundtrip is value-hash-checked against DuckDB's
     direct tokenization."""
     from pylate_spark.plans.query import InvertedIndex
 

@@ -57,6 +57,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 
 from pylate_spark import storage
 from pylate_spark.config import IndexConfig
@@ -120,10 +121,34 @@ def read_state(spark: SparkSession, paths: IndexPaths, manifest: dict, name: str
     """The active version of state table ``name``, read with its
     declared schema. No schema-inference job runs, and a table with no
     data file (a build whose corpus has no tokens) reads as empty. A
-    manifest written before ``key_type`` was recorded has string keys,
-    the ``url`` default."""
-    schema = STATE_SCHEMAS[name].format(key=manifest.get("key_type", "string"))
+    manifest written before ``key_type`` was recorded takes the key
+    type from the staging Parquet footer, read on the driver."""
+    schema = STATE_SCHEMAS[name]
+    if "{key}" in schema:
+        key = manifest.get("key_type")
+        if key is None:
+            t = storage.column_type(active_dir(paths, manifest, "staging"), "url")
+            key = "string" if t is None else from_arrow_type(t).simpleString()
+        schema = schema.format(key=key)
     return spark.read.schema(schema).parquet(active_dir(paths, manifest, name))
+
+
+#: the postings format a build writes (``functions/codec.py``), stored
+#: in the manifest as ``format``; a manifest without it is format 1
+FORMAT = 2
+
+
+def require_format(paths: IndexPaths, manifest: dict) -> None:
+    """Refuse to read or append posting payloads of an index whose
+    format is not :data:`FORMAT`. ``maintenance.rebuild_index`` reads
+    only staging and tombstones, so it migrates such an index."""
+    found = manifest.get("format", 1)
+    if found != FORMAT:
+        raise ValueError(
+            f"index at {paths.root} has postings format {found}; this version "
+            f"reads format {FORMAT} only. Rebuild it with "
+            f"maintenance.rebuild_index(spark, index_dir, dst_dir)"
+        )
 
 
 #: snapshot-retention window for superseded version dirs, seconds. 0 =
@@ -569,6 +594,7 @@ def _commit_batches(spark: SparkSession, paths: IndexPaths, manifest: dict) -> d
     followed by its own durable manifest commit, then finalize. The one
     commit path for a build, a resumed build, an add and a resumed add;
     it reads the geometry from the manifest."""
+    require_format(paths, manifest)
     config, spb = _geometry(manifest)
     for batch in range(manifest["n_batches"]):
         key = str(batch)
@@ -616,6 +642,7 @@ def build_index(
         )
         manifest = {
             "staged": True,
+            "format": FORMAT,
             "n_batches": max(staged, default=0) + 1,
             "config": config.to_dict(),
             # the batch geometry is part of the physical plan: docid →

@@ -66,6 +66,7 @@ from pylate_spark.plans.build import (
     gc_stale_versions,
     load_manifest,
     read_state,
+    require_format,
     save_manifest,
 )
 from pylate_spark.plans.segments import SEGMENT_SCHEMA
@@ -208,6 +209,7 @@ def add_documents(
     paths, manifest = _open(index_dir)
     if epoch_key is not None and _epoch_applied(manifest, epoch_key, epoch_monotonic):
         return manifest  # replayed epoch whose rows already committed
+    require_format(paths, manifest)  # before staging: a refused add leaves no rows
     config, spb = _geometry(manifest)
     batch_span = config.shard_size * spb
 
@@ -328,6 +330,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     fully live, and a re-run redoes the whole compact. Every batch is
     committed (an incomplete add is refused), so nothing is built."""
     paths, manifest = _open(index_dir)
+    require_format(paths, manifest)
     tomb = _tombstones(paths, manifest)
     if tomb.size == 0:
         return manifest

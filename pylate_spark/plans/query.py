@@ -39,7 +39,14 @@ from pylate_spark.functions.tokenize import (
     terms_long,
     tokenize_py,
 )
-from pylate_spark.plans.build import IndexPaths, _geometry, _tombstones, load_manifest, read_state
+from pylate_spark.plans.build import (
+    IndexPaths,
+    _geometry,
+    _tombstones,
+    load_manifest,
+    read_state,
+    require_format,
+)
 from pylate_spark.plans.wand import score_shard
 from pylate_spark.worker import forget_archive_importers
 
@@ -113,6 +120,7 @@ class InvertedIndex:
         self.manifest = load_manifest(self.paths)
         if not self.manifest.get("finalized"):
             raise ValueError(f"index at {index_dir} is not finalized")
+        require_format(self.paths, self.manifest)
         self.config, spb = _geometry(self.manifest)
         self.n_docs = int(self.manifest["n_docs"])
         self.avgdl = float(self.manifest["avgdl"])
@@ -181,8 +189,8 @@ class InvertedIndex:
         ``(docid, term, tf, dl)`` from the segments — the analog of
         ``index.get_documents_embeddings``
         (``/root/reference/pylate/indexes/voyager.py:324-361``).
-        Scans only the requested docids' shards; decodes with selective
-        block skipping on the docid ranges. Caller-supplied ids are
+        Scans only the requested docids' shards and keeps the blocks
+        whose docid ranges hold a requested id. Caller-supplied ids are
         deduplicated (``np.isin(assume_unique=True)`` below requires
         it) and tombstoned (deleted) docids are excluded."""
         ids = np.unique(np.asarray(docids, dtype=np.int64))

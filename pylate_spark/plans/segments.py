@@ -7,12 +7,14 @@ codec call (``ResidualCodec.compress``,
 rather than per-vector — we do the same at the posting-list level:
 :func:`encode_group_arrow` takes column arrays of ``(shard, bucket,
 term, docid, tf, dl)`` rows sorted so that each (shard, term) group is
-contiguous, and emits one segment row per group, computing deltas,
-varint bytes, and per-block metadata for *all* groups simultaneously
-with numpy; the per-group block-metadata lists and payload slices are
-built as zero-copy ``pa.ListArray``/``pa.BinaryArray`` structures — no
-per-group Python loop anywhere (contrast with ``applyInPandas``, which
-would pay a Python call per (shard, term) group — millions per batch).
+contiguous, and emits one segment row per group. The codec's
+:func:`~pylate_spark.functions.codec.encode_runs` writes *all* groups'
+format-2 runs (gap, dl and tf sections, varint bytes, per-block
+metadata) in one numpy pass; the per-group block-metadata lists and
+payload slices are built as zero-copy ``pa.ListArray``/``pa.BinaryArray``
+structures — no per-group Python loop anywhere (contrast with
+``applyInPandas``, which would pay a Python call per (shard, term)
+group — millions per batch).
 
 :func:`arrow_carry_iterator` adapts this to ``mapInArrow`` streams:
 Arrow batches split groups arbitrarily, so the trailing (possibly
@@ -25,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import types as T
 
-from pylate_spark.functions.codec import PostingBlocks, varint_encode_offsets
+from pylate_spark.functions.codec import PostingBlocks, encode_runs
 from pylate_spark.worker import forget_archive_importers
 
 SEGMENT_SCHEMA = T.StructType(
@@ -80,46 +82,15 @@ def encode_group_arrow(
     change[1:] = (term[1:] != term[:-1]) | (shard[1:] != shard[:-1])
     gstart = np.flatnonzero(change)
     ngroups = gstart.size
-    gn = np.diff(np.append(gstart, n))
-    gid = np.cumsum(change) - 1
-    pos_in_g = np.arange(n, dtype=np.int64) - gstart[gid]
+    payload, run_offs, blocks, nblocks_per_g = encode_runs(gstart, docid, tf, dl, block_size)
 
-    bs_mask = (pos_in_g % block_size) == 0
-    bs = np.flatnonzero(bs_mask)
-    bend = np.append(bs[1:], n) - 1  # inclusive; blocks never span groups
-
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = 0
-    deltas[1:] = docid[1:] - docid[:-1]
-    deltas[bs] = 0  # first posting of a block is its own base
-
-    interleaved = np.empty(3 * n, dtype=np.int64)
-    interleaved[0::3] = deltas
-    interleaved[1::3] = tf
-    interleaved[2::3] = dl
-    payload, val_offs = varint_encode_offsets(interleaved)
-
-    b_first = docid[bs]
-    b_last = docid[bend]
-    b_n = (bend - bs + 1).astype(np.int32)
-    b_max_tf = np.maximum.reduceat(tf, bs).astype(np.int32)
-    b_min_dl = np.minimum.reduceat(dl, bs).astype(np.int32)
-    block_gid = gid[bs]
-    b_off = val_offs[3 * bs] - val_offs[3 * gstart[block_gid]]
-
-    g_cf = np.add.reduceat(tf, gstart).astype(np.int64)
-    nblocks_per_g = np.bincount(block_gid, minlength=ngroups)
     boff = np.zeros(ngroups + 1, dtype=np.int32)
     np.cumsum(nblocks_per_g, out=boff[1:])
     list_offsets = pa.array(boff)
-
     # payload groups tile the byte stream contiguously → zero-copy binary
-    pay_offs = np.empty(ngroups + 1, dtype=np.int32)
-    pay_offs[:-1] = val_offs[3 * gstart]
-    pay_offs[-1] = val_offs[-1]
     payload_arr = pa.Array.from_buffers(
         pa.binary(), ngroups,
-        [None, pa.py_buffer(pay_offs.tobytes()), pa.py_buffer(payload.tobytes())],
+        [None, pa.py_buffer(run_offs.astype(np.int32).tobytes()), pa.py_buffer(payload.tobytes())],
     )
 
     def list_arr(vals, typ):
@@ -130,14 +101,14 @@ def encode_group_arrow(
             pa.array(bucket[gstart], type=pa.int32()),
             pa.array(shard[gstart], type=pa.int64()),
             pa.array(term[gstart], type=pa.string()),
-            pa.array(gn, type=pa.int64()),
-            pa.array(g_cf, type=pa.int64()),
-            list_arr(b_first, pa.int64()),
-            list_arr(b_last, pa.int64()),
-            list_arr(b_n, pa.int32()),
-            list_arr(b_max_tf, pa.int32()),
-            list_arr(b_min_dl, pa.int32()),
-            list_arr(b_off, pa.int64()),
+            pa.array(np.diff(np.append(gstart, n)), type=pa.int64()),
+            pa.array(np.add.reduceat(tf, gstart), type=pa.int64()),
+            list_arr(blocks.first, pa.int64()),
+            list_arr(blocks.last, pa.int64()),
+            list_arr(blocks.n, pa.int32()),
+            list_arr(blocks.max_tf, pa.int32()),
+            list_arr(blocks.min_dl, pa.int32()),
+            list_arr(blocks.off, pa.int64()),
             payload_arr,
         ],
         names=[

@@ -106,13 +106,12 @@ class ShardTerms:
         self.blocks = {t: blocks_from_row(r) for t, r in self.rows.items()}
         self._full: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._contrib: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._probes: dict[str, int] = {}
         self._ub: dict[str, float] = {}
         self.tombstones = tombstones
         self.allowed = allowed
         # with many queries in the batch, a term will almost surely be
-        # probed again — decode it fully once and share, instead of
-        # paying repeated selective block decodes (see contrib_at)
+        # probed again — score it fully once and share, instead of
+        # paying repeated partial scoring (see contrib_at)
         self.batch_amortized = batch_queries > 8
 
     def terms(self):
@@ -162,29 +161,22 @@ class ShardTerms:
     def contrib_at(self, term: str, cand: np.ndarray, idf_t: float, avgdl: float, params):
         """(docids, contributions) restricted to candidate docids.
 
-        Batch amortization: the first probe of a term decodes only the
-        blocks whose docid range intersects ``cand`` (the single-query
-        block-skip win); a term probed a *second* time in the same
-        batch — or one already fully scored for another query's OR
+        Batch amortization: the first probe of a term scores only its
+        postings in ``cand`` (a run decodes whole, so the decode is
+        cached by :meth:`full`); a term probed a *second* time in the
+        same batch — or one already fully scored for another query's OR
         phase — reuses the full cached contributions (no decode, no
-        tfn). With many queries per scatter, repeated partial decodes
+        tfn). With many queries per scatter, repeated partial scoring
         of the same head term would otherwise dominate the AND phase
         (measured: ~2× kernel time without this)."""
-        probes = self._probes.get(term, 0)
-        self._probes[term] = probes + 1
-        if self.batch_amortized or term in self._contrib or term in self._full or probes >= 1:
+        if self.batch_amortized or term in self._contrib or term in self._full:
             d_full, c_full = self.contrib(term, idf_t, avgdl, params)
             keep = _in_sorted(d_full, cand)
             return d_full[keep], c_full[keep]
-        b = self.blocks[term]
-        lo = np.searchsorted(cand, b.first, side="left")
-        hi = np.searchsorted(cand, b.last, side="right")
-        need = np.flatnonzero(hi > lo)
-        docids, tfs, dls = decode_postings(self.rows[term]["payload"], self.blocks[term], select=need)
-        docids, tfs, dls = self._mask(docids, tfs, dls)
+        docids, tfs, dls = self.full(term)
         keep = _in_sorted(docids, cand)
-        docids, tfs, dls = docids[keep], tfs[keep], dls[keep]
-        return docids, idf_t * tfn_np(tfs.astype(np.float64), dls.astype(np.float64), avgdl, params)
+        tfs, dls = tfs[keep].astype(np.float64), dls[keep].astype(np.float64)
+        return docids[keep], idf_t * tfn_np(tfs, dls, avgdl, params)
 
     def shard_ub_inputs(self, term: str) -> tuple[int, int]:
         """(max_tf, min_dl) over this shard's blocks — upper-bound inputs."""

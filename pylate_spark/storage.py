@@ -111,6 +111,21 @@ def read_column(path: str, column: str) -> np.ndarray:
     return d.to_table(columns=[column]).column(column).to_numpy()
 
 
+def column_type(path: str, column: str):
+    """The Arrow type of one column of the (hive-partitioned) Parquet
+    dataset under ``path``, from its file footers on the driver (None
+    if the dataset is absent or has no such column)."""
+    import pyarrow.dataset as ds
+
+    fs, p = _split(path)
+    if fs.get_file_info(p).type == pafs.FileType.NotFound:
+        return None
+    schema = ds.dataset(p, filesystem=fs, format="parquet", partitioning="hive").schema
+    if column not in schema.names:
+        return None
+    return schema.field(column).type
+
+
 def read_text(path: str) -> str:
     fs, p = _split(path)
     with fs.open_input_stream(p) as f:

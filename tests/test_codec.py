@@ -59,23 +59,34 @@ def test_postings_roundtrip(n):
     assert blocks.min_dl.min() == dls.min()
 
 
-@settings(max_examples=40, deadline=None)
+def _tfs(rng, n, tf1_share):
+    """tf values of which about ``tf1_share`` are 1 (0 and 1 exactly)."""
+    tfs = rng.integers(2, 1000, size=n).astype(np.int64)
+    tfs[rng.random(n) < tf1_share] = 1
+    return tfs
+
+
+@settings(max_examples=60, deadline=None)
 @given(
-    docid_steps=st.lists(st.integers(min_value=1, max_value=2**40), min_size=1, max_size=300),
+    docid_steps=st.lists(st.integers(min_value=1, max_value=2**42), min_size=1, max_size=300),
     tf_seed=st.integers(min_value=0, max_value=2**31),
+    tf1_share=st.sampled_from([0.0, 0.8, 1.0]),
+    const_dl=st.booleans(),
     block_size=st.sampled_from([1, 2, 64, 128, 1024]),
     base=st.sampled_from([0, 1, 2**31 - 1, 2**31, 10**12]),
 )
-def test_postings_roundtrip_property(docid_steps, tf_seed, block_size, base):
+def test_postings_roundtrip_property(docid_steps, tf_seed, tf1_share, const_dl, block_size, base):
     """Property form of the round-trip: ANY strictly-increasing int64
-    docid sequence (including gaps past 2^31 and bases past int32 — the
-    class of bug the round-2 overflow fix caught once), any tf/dl, any
-    block size must round-trip exactly, with valid block metadata."""
+    docid sequence (including gaps past 2^40 and bases past int32 — the
+    class of bug the round-2 overflow fix caught once), any tf/dl
+    (all, most or none of the tfs 1; dl varying or constant, so every
+    dl offset is 0), any block size must round-trip exactly, with valid
+    block metadata."""
     docids = base + np.cumsum(np.asarray(docid_steps, dtype=np.int64))
     rng = np.random.Generator(np.random.Philox(key=tf_seed, counter=0))
     n = docids.size
-    tfs = rng.integers(1, 1000, size=n).astype(np.int64)
-    dls = rng.integers(1, 5000, size=n).astype(np.int64)
+    tfs = _tfs(rng, n, tf1_share)
+    dls = np.full(n, 37, dtype=np.int64) if const_dl else rng.integers(1, 5000, size=n).astype(np.int64)
     payload, blocks = encode_postings(docids, tfs, dls, block_size=block_size)
     d, t, l = decode_postings(payload, blocks)
     np.testing.assert_array_equal(d, docids)
@@ -93,6 +104,33 @@ def test_postings_roundtrip_property(docid_steps, tf_seed, block_size, base):
         off += m
 
 
+@settings(max_examples=40, deadline=None)
+@given(
+    n=st.integers(min_value=1, max_value=600),
+    seed=st.integers(min_value=0, max_value=2**31),
+    tf1_share=st.sampled_from([0.0, 0.8, 1.0]),
+    block_size=st.sampled_from([1, 2, 64, 128]),
+    data=st.data(),
+)
+def test_select_equals_masked_full_decode(n, seed, tf1_share, block_size, data):
+    """Decoding the blocks in ``select`` returns exactly the postings of
+    those blocks out of the full decode, in order."""
+    rng = np.random.Generator(np.random.Philox(key=seed, counter=0))
+    docids = np.sort(rng.choice(10**9, size=n, replace=False)).astype(np.int64)
+    payload, blocks = encode_postings(
+        docids, _tfs(rng, n, tf1_share), rng.integers(1, 400, size=n), block_size=block_size
+    )
+    nb = blocks.n.size
+    select = np.asarray(
+        sorted(data.draw(st.sets(st.integers(min_value=0, max_value=nb - 1), max_size=nb))),
+        dtype=np.int64,
+    )
+    full = decode_postings(payload, blocks)
+    keep = np.repeat(np.isin(np.arange(nb), select), blocks.n)
+    for got, want in zip(decode_postings(payload, blocks, select=select), full):
+        np.testing.assert_array_equal(got, want[keep])
+
+
 def test_selective_block_decode():
     docids, tfs, dls = _random_postings(1000, seed=3)
     payload, blocks = encode_postings(docids, tfs, dls, block_size=128)
@@ -102,6 +140,26 @@ def test_selective_block_decode():
     np.testing.assert_array_equal(d, docids[expect])
     np.testing.assert_array_equal(t, tfs[expect])
     np.testing.assert_array_equal(l, dls[expect])
+
+
+def test_format2_golden_bytes():
+    """The format-2 layout of a 3-posting run, byte for byte: section A
+    holds ``gap << 1 | (tf == 1)`` (0·2+1, 2·2+0, 293·2+1 = 587 as the
+    varint cb 04), B holds ``dl - min_dl``, C the one tf that is not 1."""
+    payload, blocks = encode_postings(
+        np.array([5, 7, 300]), np.array([1, 3, 1]), np.array([10, 12, 10])
+    )
+    assert payload == bytes([0x01, 0x04, 0xCB, 0x04, 0x00, 0x02, 0x00, 0x03])
+    assert blocks.first.tolist() == [5] and blocks.last.tolist() == [300]
+    assert blocks.min_dl.tolist() == [10] and blocks.max_tf.tolist() == [3]
+    assert blocks.off.tolist() == [0]
+    # a second block's offset names its first A value, after block 0's
+    payload, blocks = encode_postings(
+        np.array([5, 7, 300]), np.array([1, 3, 1]), np.array([10, 12, 10]), block_size=2
+    )
+    assert blocks.off.tolist() == [0, 2]
+    d, t, l = decode_postings(payload, blocks)
+    assert (d.tolist(), t.tolist(), l.tolist()) == ([5, 7, 300], [1, 3, 1], [10, 12, 10])
 
 
 def test_encode_group_arrow_matches_single_term_codec():
