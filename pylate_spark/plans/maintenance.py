@@ -55,11 +55,13 @@ from pylate_spark.plans.build import (
     _finalize,
     _geometry,
     _now,
+    _read_term_stats,
     _stage_corpus,
     _staged_entries,
     _subtract_deleted,
     _tombstones,
     _write_segments,
+    _write_term_stats,
     active_dir,
     build_index,
     bump_dir,
@@ -290,7 +292,7 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     ids = np.setdiff1d(np.asarray(docids, dtype=np.int64), old_tomb)
     if not ids.size:
         return manifest
-    ts = read_state(spark, paths, manifest, "term_stats")
+    ts = _read_term_stats(spark, paths, manifest)
     new_ts, deleted, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, ids)
     if not deleted.size:
         return manifest
@@ -299,10 +301,9 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     ).parquet(storage.join(paths.root, bump_dir(manifest, "tombstones")))
     # versioned rewrite: write the new stats dir, flip the pointer in
     # the same manifest commit as the stats update below (no
-    # delete-then-move window), GC the old version after
-    new_ts.write.mode("overwrite").parquet(
-        storage.join(paths.root, bump_dir(manifest, "term_stats"))
-    )
+    # delete-then-move window), GC the old version after. No exchange:
+    # each task rewrites the rows of the bucket files it read
+    _write_term_stats(new_ts, storage.join(paths.root, bump_dir(manifest, "term_stats")))
     sum_dl = manifest.get("sum_dl", round(manifest["avgdl"] * manifest["n_docs"]))
     manifest["n_docs"] = manifest["n_docs"] - n_del
     manifest["sum_dl"] = sum_dl - dl_del

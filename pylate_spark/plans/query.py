@@ -22,8 +22,6 @@ Entry points:
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -46,6 +44,8 @@ from pylate_spark.plans.build import (
     load_manifest,
     read_state,
     require_format,
+    term_bucket,
+    term_dfs,
 )
 from pylate_spark.plans.wand import score_shard
 from pylate_spark.worker import forget_archive_importers
@@ -146,6 +146,9 @@ class InvertedIndex:
         #: kernel-stage width: one task per core, never more than shards
         self._kernel_tasks = max(1, min(self.spark.sparkContext.defaultParallelism, n_shards))
         self._df_cache: dict[str, int | None] = {}
+        #: the last search()'s planning counters: terms, df-cache hits,
+        #: terms looked up (on the driver, ``build.term_dfs``), buckets
+        self.last_search: dict[str, int] | None = None
         # tombstones are loaded ONCE per handle and broadcast: they are
         # re-used by every search/doc_vectors call, and a broadcast ships
         # them to executors once instead of pickling them into every
@@ -267,21 +270,17 @@ class InvertedIndex:
             for qid, text in qrows
         }
         all_terms = sorted({t for ts in qmap.values() for t in ts})
-        if not all_terms:
-            return self.spark.createDataFrame([], _ranked_schema(round_to))
-
-        buckets = sorted({zlib.crc32(t.encode()) % self.config.term_buckets for t in all_terms})
+        buckets = sorted({term_bucket(t, self.config.term_buckets) for t in all_terms})
         missing = [t for t in all_terms if t not in self._df_cache]
         if missing:
-            stats = (
-                read_state(self.spark, self.paths, self.manifest, "term_stats")
-                .where(in_list("term", missing))
-                .select("term", "df")
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in stats}
-            for t in missing:
-                self._df_cache[t] = found.get(t)  # None = not in vocabulary
+            found = term_dfs(self.paths, self.manifest, missing)
+            self._df_cache.update((t, found.get(t)) for t in missing)  # None = not in vocabulary
+        self.last_search = {
+            "terms": len(all_terms), "cache_hits": len(all_terms) - len(missing),
+            "looked_up": len(missing), "buckets": len(buckets),
+        }
+        if not all_terms:
+            return self.spark.createDataFrame([], _ranked_schema(round_to))
         n, params = self.n_docs, self.config.bm25
         idf = {
             t: float(idf_np(df, n))

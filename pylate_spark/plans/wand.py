@@ -7,9 +7,11 @@ exact rescoring of survivors). We implement the WAND-family
 **block-max MaxScore** strategy rather than document-at-a-time WAND:
 DAAT pivoting is a per-document Python loop (forbidden hot path);
 MaxScore needs only a loop over *query terms*, with every per-posting
-operation vectorized, and exploits the same per-block metadata
-(``max_tf``/``min_dl`` → true score upper bounds) to skip decoding
-blocks that cannot contain a top-k document.
+operation vectorized, and takes true score upper bounds from the
+per-block metadata (``max_tf``/``min_dl``, reduced to one bound per
+term and shard) to stop admitting documents that cannot reach the top
+k. It saves scoring work, not decoding: since postings format 2 a
+``(shard, term)`` run always decodes whole.
 
 Soundness argument (exactness — required for rank-identity):
 - Terms are processed in descending upper-bound order. After the OR
@@ -17,11 +19,10 @@ Soundness argument (exactness — required for rank-identity):
   most ``suffix_ub = Σ_{t∉S} UB_t``. We switch to AND mode only when
   ``suffix_ub < θ`` where θ = k-th largest *partial* (hence ≤ final)
   accumulator score — so no unseen document can enter the top k.
-- In AND mode, remaining terms are scored only at accumulator docids;
-  only blocks whose [first, last] docid range contains an accumulator
-  docid are decoded (binary search on block boundaries — the
-  block-skip). Every accumulator doc still receives its exact full
-  score, so the final top-k and scores are exact.
+- In AND mode, remaining terms are scored only at accumulator docids:
+  each remaining term's run is decoded whole and only its postings at
+  those docids are scored. Every accumulator doc still receives its
+  exact full score, so the final top-k and scores are exact.
 """
 
 from __future__ import annotations
@@ -373,8 +374,8 @@ def _score_cascade(st: ShardTerms, terms, idf, avgdl, k, params, buf, seen, stor
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     cand = store[:n_cand]
 
-    # AND phase: remaining terms scored only at surviving candidates,
-    # decoding only blocks that can contain them
+    # AND phase: remaining terms scored only at surviving candidates
+    # (each run still decodes whole: postings format 2)
     for j in range(i, len(terms)):
         t = terms[j]
         if cand.size == 0:

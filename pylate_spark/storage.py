@@ -9,8 +9,9 @@ and writes the same paths through Hadoop, which accepts the same URIs.
 
 Who reads state: ``plans.build`` owns the table formats. Spark reads
 the three large tables only through ``plans.build.read_state`` (declared
-schemas, no inference job); the tombstone set is read on the driver
-only, through :func:`read_column`, by ``plans.build._tombstones``.
+schemas, no inference job). The driver reads the tombstone set through
+:func:`read_column` (``plans.build._tombstones``) and query terms' df
+through :func:`read_table` (``plans.build.term_dfs``).
 
 Commit protocol notes (SURVEY §1.1):
 
@@ -109,6 +110,28 @@ def read_column(path: str, column: str) -> np.ndarray:
     if column not in d.schema.names:
         return np.empty(0)
     return d.to_table(columns=[column]).column(column).to_numpy()
+
+
+def read_table(dirs: list[str], columns: list[str], filter=None):
+    """``columns`` of the rows matching the pyarrow expression
+    ``filter`` in the Parquet files under ``dirs``, read on the driver
+    (None if the dirs hold no data file). Names starting with ``_`` or
+    ``.`` (``_SUCCESS``, checksums) are skipped, as Spark skips them."""
+    import pyarrow.dataset as ds
+
+    files, fs = [], None
+    for d in dirs:
+        fs, p = _split(d)
+        if fs.get_file_info(p).type == pafs.FileType.NotFound:
+            continue
+        files += [
+            fi.path
+            for fi in fs.get_file_info(pafs.FileSelector(p, recursive=True))
+            if fi.type == pafs.FileType.File and not fi.base_name.startswith(("_", "."))
+        ]
+    if not files:
+        return None
+    return ds.dataset(files, filesystem=fs, format="parquet").to_table(columns=columns, filter=filter)
 
 
 def column_type(path: str, column: str):

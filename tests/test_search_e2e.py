@@ -139,8 +139,9 @@ def test_kernel_stage_single_id_passthrough_exchange(spark, built_index, queries
 
 def test_search_planning_py4j_calls_independent_of_term_count(spark, built_index, monkeypatch):
     """Planning a batch costs the same driver→JVM round trips for 5
-    query terms as for 500: the term_stats lookup and the segment scan
-    filter are each one parsed IN-list, not one ``lit`` per term."""
+    query terms as for 500: the segment scan filter is one parsed
+    IN-list, not one ``lit`` per term, and the term_stats lookup runs
+    on the driver (``build.term_dfs``), with no round trip at all."""
     from py4j.protocol import MEMORY_COMMAND_NAME
 
     from pylate_spark.plans.build import active_dir

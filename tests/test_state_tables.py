@@ -9,6 +9,10 @@ and one reader per table, one segment writer, one tombstone reader.
 - opening a handle and reading a state table start no Spark job, and
   each declared schema equals the one Spark infers from the files, for
   string and integer key columns
+- planning ``search()`` on a fresh handle starts no Spark job (on an
+  index with tombstones, after an add, after a compact): the query
+  terms' df come from ``build.term_dfs`` on the driver, which equals a
+  Spark recount of the live documents
 - the url map (``InvertedIndex.docmap``) is a projection of staging:
   no mutation writes a ``docmap`` dir, the read starts no job and skips
   ``text``, a handle keeps its snapshot across an add, and an index
@@ -31,9 +35,10 @@ from pyspark.sql import functions as F
 
 from pylate_spark import storage
 from pylate_spark.config import BM25Params, IndexConfig
+from pylate_spark.functions.tokenize import terms_long
 from pylate_spark.oracle import OracleIndex
 from pylate_spark.plans import build as B
-from pylate_spark.plans.build import IndexPaths, active_dir, build_index, load_manifest, read_state
+from pylate_spark.plans.build import IndexPaths, active_dir, build_index, load_manifest, read_state, term_dfs
 from pylate_spark.plans.maintenance import add_documents, compact, consolidate_segments, delete_documents
 from pylate_spark.plans.query import InvertedIndex
 from pylate_spark.sources.synth import synth_pages_pandas
@@ -138,6 +143,49 @@ def test_state_reads_start_no_job(spark, tmp_path, key):
         # the declared schema is the one Spark infers from the files
         inferred = spark.read.parquet(active_dir(paths, manifest, name)).schema
         assert read_state(spark, paths, manifest, name).schema == inferred, name
+
+
+def test_search_planning_starts_no_job(spark, tmp_path):
+    """The ``term_stats`` lookup was the one Spark job of planning a
+    batch on a fresh handle; ``build.term_dfs`` reads it on the driver."""
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(synth_pages_pandas(200)), d, config=CFG, shards_per_batch=SPB)
+    delete_documents(spark, d, [1, 5, 9])
+    steps = {
+        "tombstones": lambda: None,
+        "add": lambda: add_documents(spark, spark.createDataFrame(synth_pages_pandas(60, seed=7)), d),
+        "compact": lambda: compact(spark, d),
+    }
+    n_buckets = len({B.term_bucket(t, CFG.term_buckets) for _, q in QUERIES for t in q.split()})
+    for name, mutate in steps.items():
+        mutate()
+        idx = InvertedIndex(spark, d)
+        out = {}
+        assert _jobs(spark, f"plan_{name}", lambda: out.setdefault("res", idx.search(QUERIES, k=K))) == 0, name
+        assert idx.last_search == {"terms": 8, "cache_hits": 0, "looked_up": 8, "buckets": n_buckets}, name
+        assert out["res"].count() > 0, name
+        idx.search(QUERIES[:2], k=K)
+        assert idx.last_search["cache_hits"] == idx.last_search["terms"] == 5, name
+        assert idx.last_search["looked_up"] == 0, name
+
+
+def test_term_dfs_equals_spark_recount(spark, tmp_path):
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(synth_pages_pandas(200)), d, config=CFG, shards_per_batch=SPB)
+    add_documents(spark, spark.createDataFrame(synth_pages_pandas(60, seed=7)), d)
+    delete_documents(spark, d, [2, 3, 130, 210])
+    paths = IndexPaths(d)
+    m = load_manifest(paths)
+    tomb = spark.createDataFrame(pd.DataFrame({"docid": B._tombstones(paths, m)}))
+    live = read_state(spark, paths, m, "staging").join(tomb, "docid", "left_anti")
+    want = {
+        r["term"]: r["df"]
+        for r in terms_long(live.select("docid", "text")).groupBy("term").agg(F.count(F.lit(1)).alias("df")).collect()
+    }
+    absent = [f"zzabsent{i:02d}" for i in range(20)]
+    assert len(want) > 500
+    assert term_dfs(paths, m, list(want) + absent) == want
+    assert term_dfs(paths, m, absent) == {}
 
 
 def _docmap_dirs(d: str) -> list[str]:
