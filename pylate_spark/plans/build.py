@@ -19,30 +19,27 @@ Mirrors the reference's four-phase resumable build
   (``collection_indexer.py:408-449``, ``index_saver.py:21-50``).
 - **finalize** (:func:`_finalize`): global term statistics by *fold*
   — the active ``term_stats`` plus the per-(shard, term) runs of the
-  batches not yet folded, hashed on the term bucket and summed per
-  term (the SPIMI merge; the recorded ``merge_fan_in`` is runs/term) —
-  so an add's stats work scales with its new batches only. Then the
-  manifest with corpus stats, config, lineage and per-batch metrics —
-  the analog of ``metadata.json`` (``collection_indexer.py:578-591``).
+  batches not yet folded, summed per term (the SPIMI merge; the
+  recorded ``merge_fan_in`` is runs/term) — so an add's stats work
+  scales with its new batches only. Then the manifest with corpus
+  stats, config, lineage and per-batch metrics — the analog of
+  ``metadata.json`` (``collection_indexer.py:578-591``).
   Batch and fan-in metrics are observed on the writes that produce
   them, never read back.
 
 State layout: this module owns it. ``manifest.json`` (the commit
 point) names the active version dir (:func:`active_dir`) of four
-Parquet tables: ``staging`` (partitioned by ``batch``), ``segments``
-(by ``batch``, then ``bucket``, each file sorted by ``(term,
-shard)``), ``term_stats`` (by ``bucket``, one file per bucket, sorted
-by ``term``) and ``tombstones``. A term's bucket is
-:func:`term_bucket`, ``crc32(term) % term_buckets``, in both tables.
+Parquet tables: ``staging`` and ``segments`` (partitioned by
+``batch``; segments then by ``bucket`` = :func:`term_bucket`, each
+file sorted by ``(term, shard)``), ``term_stats`` and ``tombstones``.
 Staging is also the document table: the url ↔ docid map is its
 projection (``InvertedIndex.docmap``), not a stored copy. Spark reads
 the first three only through :func:`read_state`, with the schemas
 declared once in ``STATE_SCHEMAS`` (no inference job; an empty table
 reads as empty). The driver reads the tombstones with
 :func:`_tombstones` and query terms' df with :func:`term_dfs`
-(pyarrow, only the terms' buckets, no Spark job). Segments are
-written only by :func:`_write_segments`, term stats only by
-:func:`_write_term_stats`.
+(pyarrow, no Spark job). Segments are written only by
+:func:`_write_segments`, term stats only by :func:`_write_term_stats`.
 
 Skew note (north_rule): the *salt* is the doc-range shard. A stopword's
 postings are split across all shards, so no task ever materializes more
@@ -61,7 +58,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type
 
@@ -119,7 +116,7 @@ STATE_SCHEMAS = {
         f"{f.name} {f.dataType.simpleString()}" for f in SEGMENT_SCHEMA.fields if f.name != "bucket"
     ) + ", batch int, bucket int",
     "staging": "shard long, docid long, url {key}, dl int, text string, batch int",
-    "term_stats": "term string, df long, cf long, merge_fan_in long, bucket int",
+    "term_stats": "term string, df long, cf long, merge_fan_in long",
 }
 
 
@@ -396,72 +393,33 @@ def _write_segments(df: DataFrame, seg_dir: str, batch: int):
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
-    """A term's bucket, ``crc32(term) % n_buckets``: the ``bucket=``
-    partition that holds its segment runs and its ``term_stats`` row."""
+    """A term's bucket, ``crc32(term) % n_buckets``: the segments'
+    ``bucket=`` partition that holds its runs."""
     return zlib.crc32(term.encode()) % n_buckets
 
 
-def _term_bucket_col(n_buckets: int) -> Column:
-    """:func:`term_bucket` of the ``term`` column."""
-    return (F.crc32(F.col("term")) % F.lit(n_buckets)).cast("int")
-
-
-def _read_term_stats(spark: SparkSession, paths: IndexPaths, manifest: dict) -> DataFrame:
-    """The active term stats, with ``bucket`` derived from the term: a
-    ``term_stats`` written before the bucketed layout has no partition
-    column and reads it as null."""
-    n_buckets = _geometry(manifest)[0].term_buckets
-    return read_state(spark, paths, manifest, "term_stats").withColumn(
-        "bucket", _term_bucket_col(n_buckets)
-    )
-
-
 def _write_term_stats(ts: DataFrame, ts_dir: str):
-    """The one term_stats writer: write ``ts`` (``term, df, cf,
-    merge_fan_in, bucket``) to ``ts_dir``, partitioned by ``bucket``,
-    each file sorted by ``term``. The sort is local: the caller hands
-    over each bucket's rows in one partition (the fold hashes on
-    ``bucket``; in a delete, the task that read a bucket's file
-    rewrites it), so each bucket gets one file. Returns the fan-in metrics
-    observed on the write."""
+    """The one term_stats writer (the fold and the delete rewrite):
+    write ``ts`` to ``ts_dir``. Returns the fan-in metrics observed on
+    the write."""
     obs = Observation()
-    (
-        ts.sortWithinPartitions("bucket", "term")
-        .observe(obs, F.avg("merge_fan_in").alias("avg"), F.max("merge_fan_in").alias("max"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(ts_dir)
-    )
+    ts.observe(
+        obs, F.avg("merge_fan_in").alias("avg"), F.max("merge_fan_in").alias("max")
+    ).write.mode("overwrite").parquet(ts_dir)
     return obs.get
 
 
 def term_dfs(paths: IndexPaths, manifest: dict, terms) -> dict[str, int]:
     """``{term: df}`` for the ``terms`` in the vocabulary, read on the
     driver with pyarrow, so no Spark job runs; a term not in the
-    vocabulary is not in the result. Only the terms' ``bucket=``
-    partitions are read, and the term range lets pyarrow skip the row
-    groups of those term-sorted files that hold no query term. A
-    ``term_stats`` written before the bucketed layout is read whole,
-    with the same filter; one with no data file (a corpus with no
-    tokens) holds no term."""
+    vocabulary (or a ``term_stats`` with no data file: a corpus with no
+    tokens) is not in the result."""
     import pyarrow.dataset as ds
 
-    terms = sorted(set(terms))
-    if not terms:
+    d = storage.dataset(active_dir(paths, manifest, "term_stats"))
+    if not terms or d is None or "term" not in d.schema.names:
         return {}
-    ts_dir = active_dir(paths, manifest, "term_stats")
-    present = set(storage.listdir(ts_dir))
-    dirs = [ts_dir]
-    if any(name.startswith("bucket=") for name in present):
-        n_buckets = _geometry(manifest)[0].term_buckets
-        parts = {f"bucket={term_bucket(t, n_buckets)}" for t in terms}
-        dirs = [storage.join(ts_dir, p) for p in sorted(parts & present)]
-    term = ds.field("term")
-    t = storage.read_table(
-        dirs, ["term", "df"], term.isin(terms) & (term >= terms[0]) & (term <= terms[-1])
-    )
-    if t is None:
-        return {}
+    t = d.to_table(columns=["term", "df"], filter=ds.field("term").isin(sorted(set(terms))))
     return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
 
 
@@ -489,7 +447,7 @@ def _build_one_batch(
     tl = (
         terms_long(sharded, id_col="docid", text_col="text", pattern=config.token_pattern)
         .withColumn("shard", (F.col("docid") / F.lit(config.shard_size)).cast("long"))
-        .withColumn("bucket", _term_bucket_col(n_buckets))
+        .withColumn("bucket", (F.crc32(F.col("term")) % F.lit(n_buckets)).cast("int"))
     )
     encoded = (
         tl.sortWithinPartitions("shard", "term", "docid")
@@ -622,13 +580,11 @@ def _finalize(spark: SparkSession, paths: IndexPaths, manifest: dict) -> dict:
     parts = (
         read_state(spark, paths, manifest, "segments")
         .where(in_list("batch", new))
-        .select("term", "df", "cf", F.lit(1).cast("long").alias("merge_fan_in"), "bucket")
+        .select("term", "df", "cf", F.lit(1).cast("long").alias("merge_fan_in"))
     )
     if folded:
-        parts = _read_term_stats(spark, paths, manifest).unionByName(parts)
-    # the fold's one exchange: hashing on bucket puts each bucket in one
-    # task, which the groupBy reuses and the writer needs
-    ts = parts.repartition("bucket").groupBy("bucket", "term").agg(
+        parts = read_state(spark, paths, manifest, "term_stats").unionByName(parts)
+    ts = parts.groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf"), F.sum("merge_fan_in").alias("merge_fan_in")
     )
     tomb = _tombstones(paths, manifest)

@@ -55,7 +55,6 @@ from pylate_spark.plans.build import (
     _finalize,
     _geometry,
     _now,
-    _read_term_stats,
     _stage_corpus,
     _staged_entries,
     _subtract_deleted,
@@ -292,7 +291,7 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     ids = np.setdiff1d(np.asarray(docids, dtype=np.int64), old_tomb)
     if not ids.size:
         return manifest
-    ts = _read_term_stats(spark, paths, manifest)
+    ts = read_state(spark, paths, manifest, "term_stats")
     new_ts, deleted, n_del, dl_del = _subtract_deleted(spark, paths, manifest, ts, ids)
     if not deleted.size:
         return manifest
@@ -301,8 +300,7 @@ def delete_documents(spark: SparkSession, index_dir: str, docids: list[int]) -> 
     ).parquet(storage.join(paths.root, bump_dir(manifest, "tombstones")))
     # versioned rewrite: write the new stats dir, flip the pointer in
     # the same manifest commit as the stats update below (no
-    # delete-then-move window), GC the old version after. No exchange:
-    # each task rewrites the rows of the bucket files it read
+    # delete-then-move window), GC the old version after
     _write_term_stats(new_ts, storage.join(paths.root, bump_dir(manifest, "term_stats")))
     sum_dl = manifest.get("sum_dl", round(manifest["avgdl"] * manifest["n_docs"]))
     manifest["n_docs"] = manifest["n_docs"] - n_del

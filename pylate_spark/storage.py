@@ -9,9 +9,10 @@ and writes the same paths through Hadoop, which accepts the same URIs.
 
 Who reads state: ``plans.build`` owns the table formats. Spark reads
 the three large tables only through ``plans.build.read_state`` (declared
-schemas, no inference job). The driver reads the tombstone set through
-:func:`read_column` (``plans.build._tombstones``) and query terms' df
-through :func:`read_table` (``plans.build.term_dfs``).
+schemas, no inference job). The driver opens them with :func:`dataset`:
+the tombstone set through :func:`read_column`
+(``plans.build._tombstones``), query terms' df in
+``plans.build.term_dfs``.
 
 Commit protocol notes (SURVEY §1.1):
 
@@ -97,56 +98,37 @@ def listdir(path: str) -> list[str]:
     return [posixpath.basename(fi.path) for fi in fs.get_file_info(sel)]
 
 
+def dataset(path: str):
+    """The (hive-partitioned) Parquet dataset under ``path``, opened on
+    the driver with pyarrow (None if the path is absent). Names
+    starting with ``_`` or ``.`` (``_SUCCESS``, checksums) are not data
+    files, as for Spark."""
+    import pyarrow.dataset as ds
+
+    fs, p = _split(path)
+    if fs.get_file_info(p).type == pafs.FileType.NotFound:
+        return None
+    return ds.dataset(p, filesystem=fs, format="parquet", partitioning="hive")
+
+
 def read_column(path: str, column: str) -> np.ndarray:
     """One column of the Parquet files under ``path``, read on the
     driver without a Spark job (empty if the dataset is absent or has
     no such column). For small state tables such as tombstones."""
-    import pyarrow.dataset as ds
-
-    fs, p = _split(path)
-    if fs.get_file_info(p).type == pafs.FileType.NotFound:
-        return np.empty(0)
-    d = ds.dataset(p, filesystem=fs, format="parquet")
-    if column not in d.schema.names:
+    d = dataset(path)
+    if d is None or column not in d.schema.names:
         return np.empty(0)
     return d.to_table(columns=[column]).column(column).to_numpy()
 
 
-def read_table(dirs: list[str], columns: list[str], filter=None):
-    """``columns`` of the rows matching the pyarrow expression
-    ``filter`` in the Parquet files under ``dirs``, read on the driver
-    (None if the dirs hold no data file). Names starting with ``_`` or
-    ``.`` (``_SUCCESS``, checksums) are skipped, as Spark skips them."""
-    import pyarrow.dataset as ds
-
-    files, fs = [], None
-    for d in dirs:
-        fs, p = _split(d)
-        if fs.get_file_info(p).type == pafs.FileType.NotFound:
-            continue
-        files += [
-            fi.path
-            for fi in fs.get_file_info(pafs.FileSelector(p, recursive=True))
-            if fi.type == pafs.FileType.File and not fi.base_name.startswith(("_", "."))
-        ]
-    if not files:
-        return None
-    return ds.dataset(files, filesystem=fs, format="parquet").to_table(columns=columns, filter=filter)
-
-
 def column_type(path: str, column: str):
-    """The Arrow type of one column of the (hive-partitioned) Parquet
-    dataset under ``path``, from its file footers on the driver (None
-    if the dataset is absent or has no such column)."""
-    import pyarrow.dataset as ds
-
-    fs, p = _split(path)
-    if fs.get_file_info(p).type == pafs.FileType.NotFound:
+    """The Arrow type of one column of the Parquet dataset under
+    ``path``, from its file footers on the driver (None if the dataset
+    is absent or has no such column)."""
+    d = dataset(path)
+    if d is None or column not in d.schema.names:
         return None
-    schema = ds.dataset(p, filesystem=fs, format="parquet", partitioning="hive").schema
-    if column not in schema.names:
-        return None
-    return schema.field(column).type
+    return d.schema.field(column).type
 
 
 def read_text(path: str) -> str:

@@ -2,31 +2,22 @@
 active term stats, a delete subtracts only the documents it deletes.
 
 Every check compares against a from-scratch recount over the live
-texts: ``term_stats (term, df, cf)`` against a ``Counter`` of
-``tokenize_py`` tokens, the manifest's ``n_docs`` / ``sum_dl`` /
-``avgdl`` against the live corpus, and ``search`` against
-``OracleIndex`` (rank identity). The fold must agree after random
-add / delete / compact sequences, after a kill at the fold's commit,
-on a manifest written before the fold record existed, and without
-re-tokenizing any deleted document on add.
-
-Every writer leaves ``term_stats`` bucketed: each row in
-``bucket=crc32(term) % term_buckets``, one file per bucket, sorted by
-``term``. A ``term_stats`` of the unpartitioned layout before it still
-searches exactly, and the next add or delete rewrites it bucketed.
+texts: ``term_stats (term, df, cf)`` and the driver's df lookup
+(``build.term_dfs``) against a ``Counter`` of ``tokenize_py`` tokens,
+the manifest's ``n_docs`` / ``sum_dl`` / ``avgdl`` against the live
+corpus, and ``search`` against ``OracleIndex`` (rank identity). The
+fold must agree after random add / delete / compact sequences, after
+a kill at the fold's commit, on a manifest written before the fold
+record existed, and without re-tokenizing any deleted document on add.
 """
 
 from __future__ import annotations
 
-import glob
 import itertools
-import os
-import zlib
 from collections import Counter
 
 import numpy as np
 import pandas as pd
-import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -35,14 +26,7 @@ from pylate_spark.config import BM25Params, IndexConfig
 from pylate_spark.functions.tokenize import tokenize_py
 from pylate_spark.oracle import OracleIndex
 from pylate_spark.plans import build as B
-from pylate_spark.plans.build import (
-    IndexPaths,
-    active_dir,
-    build_index,
-    load_manifest,
-    read_state,
-    save_manifest,
-)
+from pylate_spark.plans.build import IndexPaths, active_dir, build_index, load_manifest, save_manifest
 from pylate_spark.plans.maintenance import add_documents, compact, delete_documents, resume_add
 from pylate_spark.plans.query import InvertedIndex
 from pylate_spark.sources.synth import synth_pages_pandas
@@ -94,37 +78,13 @@ def _assert_exact(spark, d: str, live: dict[int, str]) -> None:
     m = load_manifest(paths)
     got = {
         r["term"]: (int(r["df"]), int(r["cf"]))
-        for r in read_state(spark, paths, m, "term_stats").collect()
+        for r in spark.read.parquet(active_dir(paths, m, "term_stats")).collect()
     }
     assert got == {t: (df[t], cf[t]) for t in df}
+    assert B.term_dfs(paths, m, [*df, "zzzznotaword"]) == dict(df)
     assert m["n_docs"] == len(dls)
     assert m["sum_dl"] == sum(dls)
     assert m["avgdl"] == pytest.approx(sum(dls) / len(dls) if dls else 0.0, rel=1e-12)
-    assert _bucket_files(d) == {b: 1 for b in {zlib.crc32(t.encode()) % CFG.term_buckets for t in df}}
-    _assert_search(spark, d, live)
-
-
-def _bucket_files(d: str) -> dict[int, int]:
-    """Data files per ``bucket=`` dir of the active term_stats, after
-    checking that each holds only its bucket's terms, in term order,
-    and that no data file sits outside a bucket dir."""
-    paths = IndexPaths(d)
-    ts_dir = active_dir(paths, load_manifest(paths), "term_stats")
-    files = sorted(glob.glob(f"{ts_dir}/**/*.parquet", recursive=True))
-    counts = Counter()
-    for f in files:
-        part = os.path.basename(os.path.dirname(f))
-        assert part.startswith("bucket="), f
-        b = int(part.split("=", 1)[1])
-        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
-        assert terms == sorted(terms), f
-        assert {zlib.crc32(t.encode()) % CFG.term_buckets for t in terms} <= {b}, f
-        counts[b] += 1
-    return dict(counts)
-
-
-def _assert_search(spark, d: str, live: dict[int, str]) -> None:
-    """``search`` is rank-identical to an ``OracleIndex`` of ``live``."""
     oracle = OracleIndex(list(live.items()))
     rows = InvertedIndex(spark, d).search(QUERIES, k=K).orderBy("query_id", "rank").collect()
     want = oracle.search_all(QUERIES, k=K)
@@ -285,37 +245,3 @@ def test_manifest_without_fold_record_refolds_exactly(spark, tmp_path, monkeypat
     resume_add(spark, d)
     corpus.staged(_new_base(d), pdf)
     _assert_exact(spark, d, corpus.live)
-
-
-@pytest.mark.parametrize("mutation", ["add", "delete"])
-def test_unpartitioned_term_stats_searches_then_rewrites_bucketed(spark, tmp_path, mutation):
-    """An index whose ``term_stats`` has the layout before bucketing:
-    unpartitioned, unsorted, several files. ``term_dfs`` reads it whole
-    and search stays exact; the next mutation rewrites it bucketed. An
-    add folds through the bucket exchange, so each bucket gets one file;
-    a delete rewrites file by file, so a bucket gets one file per old
-    file until the next fold."""
-    d = str(tmp_path / "idx")
-    corpus = Corpus(4)
-    _build(spark, d, corpus, 60)
-    paths = IndexPaths(d)
-    m = load_manifest(paths)
-    read_state(spark, paths, m, "term_stats").drop("bucket").orderBy("df").repartition(3).write.parquet(
-        os.path.join(d, "term_stats_v7")
-    )
-    m["dirs"]["term_stats"] = "term_stats_v7"
-    save_manifest(paths, m)
-    assert not glob.glob(os.path.join(d, "term_stats_v7", "bucket=*"))
-    _assert_search(spark, d, corpus.live)
-
-    if mutation == "add":
-        _add(spark, d, corpus, 20)
-        _assert_exact(spark, d, corpus.live)
-    else:
-        delete_documents(spark, d, [3, 4, 40])
-        for i in (3, 4, 40):
-            corpus.live.pop(i)
-        assert _bucket_files(d)
-        _assert_search(spark, d, corpus.live)
-        _add(spark, d, corpus, 20)
-        _assert_exact(spark, d, corpus.live)
